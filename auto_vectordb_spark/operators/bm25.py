@@ -18,6 +18,11 @@ Design (scale-first):
   — then scored with the BM25 formula and top-k'd per query. The corpus is
   never re-scanned at query time.
 
+The persisted, incrementally maintained form of this index (epoch-tagged
+parquet appended by ingest, latest epoch wins, tombstones) lives in
+operators/retraction.py: one writer (``bm25_index_append``), one reader
+(``bm25_index_with_deletes``) and its maintenance rewrites.
+
 Lucene's BM25: idf = ln(1 + (N - df + 0.5)/(df + 0.5)),
 score = idf * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)), k1=1.2, b=0.75.
 Identical formula in the DuckDB oracle (plans/parity.py).
@@ -143,187 +148,6 @@ def search(index: BM25Index, queries: DataFrame, k: int = 10) -> DataFrame:
     )
     scored = score_terms(index, terms)
     return top_k_per_group(scored, ["query_id"], "score", k, tie_break="doc_id")
-
-
-def score_terms_adhoc(
-    docs: DataFrame,
-    query_terms: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """:func:`score_terms` semantics WITHOUT a prebuilt index — the right
-    plan when the index is not persisted (one-shot search over a corpus).
-
-    Scores are bit-identical to the index path; the plan is materially
-    better for the one-shot case:
-
-    - the exploded token stream is **broadcast-pruned to query terms BEFORE
-      the (term, doc_id) shuffle** — the full-corpus postings shuffle that
-      ``build_index`` pays never happens, only matching rows move;
-    - per-term df comes from a window over the pruned tf table (df of a
-      query term only needs rows for that term — prune-invariant), so there
-      is no term_df branch re-deriving postings (the diamond that made the
-      index path recompute its corpus scan);
-    - N / avgdl still come from the cheap no-explode corpus scan (global by
-      definition; a broadcast 1-row cross join, no collect — the whole
-      search is one job).
-
-    Net: 2 corpus scans (1 stats, 1 explode+prune) and a query-sized
-    shuffle, vs the index path's explode shuffle + recompute. At 100 TB
-    with a *persisted* postings table, prefer build_index(cache)/score_terms
-    — this operator is for when no index exists.
-    """
-    from pyspark.sql import Window
-
-    from .dedup import fan_out_small_scan
-
-    # tokenize is the expensive per-row stage and this plan runs it in
-    # three legs (explode, doc_lens join, stats agg); fan an under-split
-    # scan once so all three parallelize — conditional, no-op on a
-    # well-partitioned 100 TB corpus (same fix as every dedup front end)
-    docs = fan_out_small_scan(docs)
-    toks = tokenize(F.col(text_col))
-    doc_lens = docs.select(F.col(id_col).alias("doc_id"), F.size(toks).alias("dl")).filter(
-        F.col("dl") > 0
-    )
-    qterms = F.broadcast(query_terms.select("term").distinct())
-    tokens = docs.select(F.col(id_col).alias("doc_id"), F.explode(toks).alias("term"))
-    tf_table = (
-        tokens.join(qterms, "term")  # broadcast semi-prune, pre-shuffle
-        .groupBy("term", "doc_id")
-        .agg(F.count("*").alias("tf"))
-    )
-    with_df = tf_table.withColumn("df", F.count("*").over(Window.partitionBy("term")))
-    qt = F.broadcast(query_terms.select("query_id", "term").distinct())
-    matched = (
-        qt.join(with_df, "term")
-        .join(doc_lens, "doc_id")
-        .crossJoin(F.broadcast(_stats_of(doc_lens)))
-    )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("__n") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
-    tf, dl = F.col("tf").cast("double"), F.col("dl").cast("double")
-    score = idf * (
-        tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / F.col("__avgdl")))
-    )
-    return matched.select(
-        "query_id", "doc_id", score.alias("term_score")
-    ).groupBy("query_id", "doc_id").agg(F.sum("term_score").alias("score"))
-
-
-def index_from_dir(spark, index_dir: str, cache: bool = False) -> BM25Index:
-    """Open a :class:`BM25Index` over the append-only artifacts written by
-    ``streaming.pipeline.incremental_bm25_index`` — latest epoch wins per
-    doc (ES ``_id`` overwrite semantics, /root/reference/backend/process/
-    elasticsearch_index.py:141).
-
-    The latest-epoch resolution is a (doc_id) groupBy over doc_lens — the
-    SMALL artifact (one row per doc version, no terms) — semi-joined back
-    into postings. Postings, the big artifact, pays one equi-join on its
-    natural read and is never shuffled on a new key when it is stored
-    partitioned by doc_id hash. Scores from this index are bit-identical to
-    a from-scratch :func:`build_index` over the logically-current corpus
-    (gated in tests/test_streaming.py).
-    """
-    lens_all = spark.read.parquet(f"{index_dir}/doc_lens")
-    post_all = spark.read.parquet(f"{index_dir}/postings")
-    latest = lens_all.groupBy("doc_id").agg(F.max("epoch").alias("epoch"))
-    # dropDuplicates absorbs a crash-replayed epoch: a foreachBatch retry
-    # appends a second IDENTICAL copy of the batch's rows, and without the
-    # dedup every doc length (and every tf) of that epoch would count twice,
-    # silently doubling scores. With it, replays are true no-ops.
-    doc_lens = (
-        lens_all.join(latest, ["doc_id", "epoch"])
-        .dropDuplicates(["doc_id"])
-        .select("doc_id", "dl")
-    )
-    postings = (
-        post_all.join(latest, ["doc_id", "epoch"])
-        .dropDuplicates(["doc_id", "term"])
-        .select("term", "doc_id", "tf")
-    )
-    term_df = postings.groupBy("term").agg(F.count("*").alias("df"))
-    if cache:
-        postings = postings.cache()
-        doc_lens = doc_lens.cache()
-        term_df = term_df.cache()
-    return BM25Index(postings, doc_lens, term_df, _stats_of(doc_lens))
-
-
-def compact_index(spark, index_dir: str) -> dict[str, int]:
-    """LSM-style compaction of the append-only incremental index: rewrite
-    ``postings/`` and ``doc_lens/`` keeping ONLY each doc's latest epoch
-    (and one physical copy of it — crash-replayed duplicate appends are
-    squashed too). This is the maintenance job the append-only layout
-    assumes (streaming.pipeline.incremental_bm25_index): without it, every
-    re-index of a doc grows the artifacts and the reader's latest-epoch
-    resolution pays read amplification proportional to the overwrite count.
-
-    Epoch values are PRESERVED, not reset: foreachBatch epochs are
-    monotonically increasing under one checkpoint, so a post-compaction
-    append still supersedes the compacted rows for its doc ids — gated in
-    tests/test_streaming.py.
-
-    Run this with the ingest stream stopped (or between micro-batches, from
-    the same maintenance scheduler that owns small-file compaction,
-    sources/files.py compact_table): the swap is rename-atomic per artifact
-    but appends that land between the read and the swap would be lost.
-
-    At 100 TB this is one (doc_id, epoch) equi-join per artifact — postings,
-    the big side, shuffles once on its natural key; ``latest`` (one row per
-    LIVE doc — not per version, not per term) is the small side of both
-    joins but still per-doc, so it is left to AQE to broadcast or shuffle
-    rather than forced (a billion-doc corpus must not be driver-collected).
-
-    Returns row counts {postings_before, postings_after, doc_lens_before,
-    doc_lens_after} so schedulers can log the reclaimed amplification.
-    """
-    import shutil
-    from pathlib import Path
-
-    lens_all = spark.read.parquet(f"{index_dir}/doc_lens")
-    post_all = spark.read.parquet(f"{index_dir}/postings")
-    counts = {"doc_lens_before": lens_all.count(), "postings_before": post_all.count()}
-    latest = lens_all.groupBy("doc_id").agg(F.max("epoch").alias("epoch"))
-    doc_lens = (
-        lens_all.join(latest, ["doc_id", "epoch"])
-        .dropDuplicates(["doc_id"])
-        .select("doc_id", "dl", "epoch")
-    )
-    postings = (
-        post_all.join(latest, ["doc_id", "epoch"])
-        .dropDuplicates(["doc_id", "term"])
-        .select("doc_id", "term", "tf", "epoch")
-    )
-    base = Path(index_dir)
-    jobs = (("doc_lens", doc_lens), ("postings", postings))
-    # Materialize BOTH staging writes before swapping EITHER artifact: the
-    # postings plan joins `latest` (derived from doc_lens), so swapping
-    # doc_lens first would pull the files out from under the postings job.
-    for name, df in jobs:
-        df.write.mode("overwrite").parquet(str(base / f"_{name}_compact"))
-    for name, _ in jobs:
-        # Aside-rename ordering: live -> _old (atomic), staging -> live
-        # (atomic), then delete _old. Each rename is atomic, but BETWEEN
-        # the two the live path is briefly absent — a concurrent reader in
-        # that window sees a missing directory, and a crash there requires
-        # manually renaming _old back. Readers that must never observe a
-        # missing path need a versioned-directory or symlink-flip scheme
-        # on a filesystem that supports it; for batch maintenance windows
-        # (the intended use) this brief gap is acceptable.
-        final = base / name
-        old = base / f"_{name}_old"
-        if old.exists():
-            shutil.rmtree(old)
-        final.rename(old)
-        (base / f"_{name}_compact").rename(final)
-        shutil.rmtree(old)
-        spark.catalog.refreshByPath(str(final))
-    counts["doc_lens_after"] = spark.read.parquet(f"{index_dir}/doc_lens").count()
-    counts["postings_after"] = spark.read.parquet(f"{index_dir}/postings").count()
-    return counts
 
 
 def prf_expansion(

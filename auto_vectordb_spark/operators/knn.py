@@ -847,7 +847,8 @@ def ivf_append(
 
 def ivf_compact(spark, path: str, corpus_id: str = "vec_id") -> dict[str, int]:
     """Maintenance rewrite of a persisted IVF index (the vector-side analog
-    of BM25's :func:`~auto_vectordb_spark.operators.bm25.compact_index`):
+    of BM25's
+    :func:`~auto_vectordb_spark.operators.retraction.bm25_compact_index`):
     squash crash-replayed duplicate appends down to one row per vector and
     rewrite each ``centroid_id=`` partition's accumulated small files.
 
@@ -860,13 +861,14 @@ def ivf_compact(spark, path: str, corpus_id: str = "vec_id") -> dict[str, int]:
     Plan: one (corpus_id) shuffle for the dedup; the rewrite preserves the
     ``partitionBy("centroid_id")`` layout so partition-pruned search
     (:func:`ivf_search_persisted`) is untouched. Run with ingest paused —
-    the staging write + directory swap is atomic per rename but appends
-    landing mid-compaction would be dropped.
+    the staging write + directory swap (sources.files.swap_dir) is atomic
+    per rename but appends landing mid-compaction would be dropped.
 
     Returns {rows_before, rows_after} for maintenance logging.
     """
-    import shutil
     from pathlib import Path
+
+    from ..sources.files import swap_dir
 
     idx = spark.read.parquet(path)
     before = idx.count()
@@ -877,19 +879,7 @@ def ivf_compact(spark, path: str, corpus_id: str = "vec_id") -> dict[str, int]:
         .partitionBy("centroid_id")
         .parquet(staging)
     )
-    # Aside-rename ordering: live -> _old, staging -> live, delete _old.
-    # Each rename is atomic, but between the two the live path is briefly
-    # absent — concurrent readers in that window see a missing directory,
-    # and a crash there requires manually renaming _old back. Acceptable
-    # for the intended paused-ingest maintenance window; continuous readers
-    # need a versioned-directory scheme instead.
-    old = Path(path).parent / f"_{Path(path).name}_old"
-    if old.exists():
-        shutil.rmtree(old)
-    Path(path).rename(old)
-    Path(staging).rename(path)
-    shutil.rmtree(old)
-    spark.catalog.refreshByPath(path)
+    swap_dir(spark, staging, path)
     after = spark.read.parquet(path).count()
     return {"rows_before": before, "rows_after": after}
 

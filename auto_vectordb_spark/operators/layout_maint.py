@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import release_materialized
 from .layout import (
     GRID_BITS,
     PROBE_X,
@@ -57,55 +58,30 @@ _MAIN_SCHEMA = "{pay} long, xg long, yg long, z_bucket long"
 
 
 def _materialize_corpus(df: DataFrame) -> DataFrame:
-    """Materialize a corpus-sized, multiply-consumed working set — the
-    posture knob the r12 verdict (#3) asked to settle for the two z-order
-    maintenance paths, which checkpoint the cleaned narrow events frame.
+    """Materialize a corpus-sized, multiply-consumed working set with
+    ``persist(StorageLevel.DISK_ONLY)`` + a count() — the posture the r12
+    verdict (#3) asked to settle for the two z-order maintenance paths,
+    measured head-to-head at 20M rows (200x the bench SF; full table in
+    OPTIMIZATION_r13.md): within 1% of an eager localCheckpoint, and it
+    KEEPS LINEAGE, so a lost executor recomputes its blocks instead of
+    killing the job (non-replicated lineage-free blocks were the r12
+    verdict's 100 TB objection to the corpus-sized localCheckpoint).
+    MEMORY_AND_DISK (eviction churn) and no materialization (every
+    consumer re-derives from the source scan) measured slower. Safe here
+    because these frames read only immutable inputs (the
+    self-overwrite-hazard frame below stays a localCheckpoint precisely
+    because its recompute would read overwritten files — the lineage CUT
+    is the point there).
 
-    Modes ($SPARK_GRAFT_CORPUS_MAT, measured head-to-head at 20M rows
-    (200x the bench SF): checkpoint 18.1 s, disk 18.3 s, none 20.1 s,
-    memdisk 21.9 s — full table in OPTIMIZATION_r13.md):
-
-    - ``disk`` (default): ``persist(StorageLevel.DISK_ONLY)`` + a count()
-      to materialize — measured WITHIN 1% of localCheckpoint at 20M rows
-      and it KEEPS LINEAGE, so a lost executor recomputes its blocks
-      instead of killing the job; non-replicated lineage-free blocks were
-      the r12 verdict's 100 TB objection to the corpus-sized
-      localCheckpoint. Safe here because these frames read only immutable
-      inputs (the self-overwrite-hazard frame below stays a
-      localCheckpoint precisely because its recompute would read
-      overwritten files — the lineage CUT is the point there).
-    - ``checkpoint``: eager ``localCheckpoint`` — the r12 posture;
-      equally fast, no recompute on executor loss.
-    - ``memdisk``: ``persist(StorageLevel.MEMORY_AND_DISK)`` — measured
-      slowest at size (eviction churn); kept for completeness.
-    - ``none``: no materialization — every consumer re-derives from the
-      source scan; the double-scan baseline, ~10% slower at 20M rows.
-
-    Release the returned frame with :func:`_release_corpus` once every
-    consumer has executed — corpus-sized blocks must not outlive the
+    Release the returned frame with ``session.release_materialized`` once
+    every consumer has executed — corpus-sized blocks must not outlive the
     operator call (the same explicit-release rule cluster.lloyd follows).
     """
-    import os
+    from pyspark import StorageLevel
 
-    mode = os.environ.get("SPARK_GRAFT_CORPUS_MAT", "disk")
-    if mode == "none":
-        return df
-    if mode in ("disk", "memdisk"):
-        from pyspark import StorageLevel
-
-        level = StorageLevel.DISK_ONLY if mode == "disk" else StorageLevel.MEMORY_AND_DISK
-        out = df.persist(level)
-        out.count()
-        return out
-    return df.localCheckpoint(eager=True)
-
-
-def _release_corpus(df: DataFrame) -> None:
-    """Free the blocks :func:`_materialize_corpus` pinned (a no-op for
-    mode=none)."""
-    from ..session import release_materialized
-
-    release_materialized(df)
+    out = df.persist(StorageLevel.DISK_ONLY)
+    out.count()
+    return out
 
 
 def _clean(events: DataFrame, id_col: str, x_col: str, ts_col: str) -> DataFrame:
@@ -316,8 +292,8 @@ def zorder_compaction_apply(
     # every consumer of the corpus-sized frames has executed (writes
     # committed, plan checkpointed): release their blocks — corpus-sized
     # storage must not outlive the operator call (r12 verdict #2 caveat)
-    _release_corpus(merged)
-    _release_corpus(ev)
+    release_materialized(merged)
+    release_materialized(ev)
     return plan
 
 
@@ -634,7 +610,7 @@ def zorder_write_ranged(
     ).parquet(path)
     # stats agg, global_rank's sketch and the write have all executed:
     # release the corpus-sized blocks (see _materialize_corpus)
-    _release_corpus(ev)
+    release_materialized(ev)
 
 
 def probe_z_intervals(

@@ -40,6 +40,11 @@ class, because the algebra splits cleanly in two:
   :func:`bm25_index_with_deletes` give the incremental BM25 index
   tombstone semantics: delete-at-epoch kills earlier versions, a later
   re-index resurrects, df/N/avgdl recomputed over live docs only.
+  This module owns that index's on-disk format end to end: its one
+  writer (:func:`bm25_index_append`, which the streaming ingest calls
+  too), its one reader (:func:`bm25_index_with_deletes`) and its
+  maintenance rewrites (:func:`bm25_compact_index`,
+  :func:`bm25_reclaim_deleted`, :func:`bm25_compact_deletes`).
 
 Separate module by design (staleness blast radius: incremental.py holds
 four fresh attestations; see MEMORY / tools/blast_radius.py). Reference
@@ -259,6 +264,72 @@ def dedup_index_retract(
     return survivors, upd_buckets, upd_pairs
 
 
+# ---- the incremental BM25 index ------------------------------------------
+#
+# One on-disk format, known only to the functions below (the streaming
+# ingest writes through bm25_index_append too):
+#   postings/ (doc_id, term, tf, epoch long)
+#   doc_lens/ (doc_id, dl, epoch long)   — the commit marker, written last
+#   deletes/  (doc_id, epoch long)       — tombstones
+# Latest epoch wins per doc; a tombstone at epoch e kills every version
+# with epoch <= e.
+
+
+def _latest(lens_all: DataFrame, deletes: DataFrame | None = None) -> DataFrame:
+    """THE latest-epoch resolution: (doc_id, epoch) of each doc's latest
+    indexed version, taken from ``doc_lens`` — the SMALL artifact (one row
+    per doc version, no terms) and the commit marker, so a torn append
+    whose doc_lens never landed is invisible. With ``deletes`` the frame
+    also carries ``__de``, the doc's latest tombstone epoch (NULL when
+    never deleted); :func:`_is_live` is the liveness test over it."""
+    latest = lens_all.groupBy("doc_id").agg(F.max("epoch").alias("epoch"))
+    if deletes is None:
+        return latest
+    del_latest = deletes.groupBy("doc_id").agg(F.max("epoch").alias("__de"))
+    return latest.join(del_latest, "doc_id", "left_outer")
+
+
+def _is_live():
+    """Liveness over :func:`_latest`'s frame: the latest indexed epoch is
+    strictly greater than the latest tombstone (delete wins an equal-epoch
+    tie: within one batch, erase means erase)."""
+    return F.col("__de").isNull() | (F.col("epoch") > F.col("__de"))
+
+
+def _rows_at(
+    lens_all: DataFrame, post_all: DataFrame, epochs: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """(doc_lens, postings) rows at each doc's epoch in ``epochs``
+    (doc_id, epoch). Postings, the big artifact, pays one equi-join on its
+    natural read. dropDuplicates absorbs a crash-replayed epoch: a retried
+    append lands a second IDENTICAL copy of the batch's rows, and without
+    the dedup every doc length (and every tf) of that epoch would count
+    twice, silently doubling scores. With it, replays are true no-ops."""
+    key = ["doc_id", "epoch"]
+    return (
+        lens_all.join(epochs, key).dropDuplicates(["doc_id"]),
+        post_all.join(epochs, key).dropDuplicates(["doc_id", "term"]),
+    )
+
+
+def _read_deletes(spark, index_dir: str, lens_all: DataFrame) -> DataFrame:
+    """``deletes/`` — or an empty frame of the same schema before the first
+    tombstone lands."""
+    from pyspark.sql import types as T
+    from pyspark.sql.utils import AnalysisException
+
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", lens_all.schema["doc_id"].dataType),
+            T.StructField("epoch", T.LongType()),
+        ]
+    )
+    try:
+        return spark.read.schema(schema).parquet(f"{index_dir}/deletes")
+    except AnalysisException:
+        return spark.createDataFrame([], schema)
+
+
 def bm25_index_append(
     docs: DataFrame,
     index_dir: str,
@@ -266,47 +337,45 @@ def bm25_index_append(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> None:
-    """Batch twin of the streaming writer's per-micro-batch append
-    (streaming.pipeline.incremental_bm25_index — identical artifact
-    schemas: ``postings/`` (doc_id, term, tf, epoch), ``doc_lens/``
-    (doc_id, dl, epoch)), for backfills and batch re-index jobs that
-    share an index dir with the stream. Re-appending a doc at a higher
-    epoch logically overwrites it (latest-epoch-wins readers)."""
-    from concurrent.futures import ThreadPoolExecutor
+    """THE writer of the incremental BM25 index: tokenize ``docs`` and
+    APPEND ``postings/`` (doc_id, term, tf, epoch) and ``doc_lens/``
+    (doc_id, dl, epoch), ``epoch`` always long. The streaming ingest
+    (streaming.pipeline.incremental_bm25_index) calls it per micro-batch;
+    backfills and batch re-index jobs call it directly and may share the
+    stream's index dir. Re-appending a doc at a higher epoch logically
+    overwrites it (ES ``_id`` overwrite semantics, reference
+    backend/process/elasticsearch_index.py:141); re-appending the same
+    epoch — a crash replay — is absorbed by the reader.
 
+    The write ORDER is the commit protocol: readers take each doc's
+    latest epoch from doc_lens and join postings on it, so doc_lens must
+    land LAST. A crash between the two jobs leaves postings rows at an
+    epoch no doc_lens row names — invisible, the previous version still
+    serves, and the replay appends both. Landing doc_lens first (which
+    overlapping the two jobs allows) would instead commit the new epoch
+    with zero postings: the doc masks its old version yet still counts
+    in N and avgdl. Overlapping the writes safely needs an explicit
+    per-epoch commit marker."""
     from ..functions.text import tokenize
 
     b = docs.dropDuplicates([id_col])
     toks = tokenize(F.col(text_col))
     base = b.select(F.col(id_col).alias("doc_id"), toks.alias("__toks"))
-
-    def write_postings():
-        (
-            base.select("doc_id", F.explode("__toks").alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count("*").alias("tf"))
-            .withColumn("epoch", F.lit(epoch).cast("long"))
-            .write.mode("append")
-            .parquet(f"{index_dir}/postings")
-        )
-
-    def write_doc_lens():
-        (
-            base.select("doc_id", F.size("__toks").alias("dl"))
-            .filter(F.col("dl") > 0)
-            .withColumn("epoch", F.lit(epoch).cast("long"))
-            .write.mode("append")
-            .parquet(f"{index_dir}/doc_lens")
-        )
-
-    # The two artifact writes are independent jobs over the same lazy
-    # tokenized projection (different output dirs, no shared state):
-    # overlap them so the doc_lens job back-fills executor cores idled by
-    # the postings job's shuffle tail (opt guide §2.6) instead of paying
-    # two sequential batch passes end to end.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [pool.submit(write_postings), pool.submit(write_doc_lens)]:
-            f.result()
+    (
+        base.select("doc_id", F.explode("__toks").alias("term"))
+        .groupBy("doc_id", "term")
+        .agg(F.count("*").alias("tf"))
+        .withColumn("epoch", F.lit(epoch).cast("long"))
+        .write.mode("append")
+        .parquet(f"{index_dir}/postings")
+    )
+    (
+        base.select("doc_id", F.size("__toks").alias("dl"))
+        .filter(F.col("dl") > 0)
+        .withColumn("epoch", F.lit(epoch).cast("long"))
+        .write.mode("append")
+        .parquet(f"{index_dir}/doc_lens")
+    )
 
 
 def bm25_delete_docs(
@@ -330,50 +399,24 @@ def bm25_delete_docs(
 
 
 def bm25_index_with_deletes(spark, index_dir: str, cache: bool = False):
-    """Delete-aware reader for the incremental BM25 index: latest-epoch
-    resolution per doc (bm25.index_from_dir semantics, crash-replay
-    dedup included) PLUS tombstone filtering — a doc is live iff its
-    latest indexed epoch is strictly greater than its latest tombstone
-    (delete wins an equal-epoch tie: within one batch, erase means
-    erase). df/N/avgdl are recomputed over LIVE docs only, so scores are
-    bit-identical to a from-scratch build over the logically-current
-    corpus (oracle-attested: bm25_delete_search). The liveness join is
-    per-doc over the SMALL artifacts; postings, the big table, pays the
-    same one equi-join as the delete-free reader."""
-    from pyspark.sql import types as T
-    from pyspark.sql.utils import AnalysisException
-
+    """THE reader of the incremental BM25 index: a :class:`BM25Index` over
+    each LIVE doc's latest epoch (crash-replay dedup included) — a doc is
+    live iff its latest indexed epoch is strictly greater than its latest
+    tombstone; with no ``deletes/`` yet, every doc is live. df/N/avgdl
+    are recomputed over LIVE docs only, so scores are bit-identical to a
+    from-scratch bm25.build_index over the logically-current corpus
+    (oracle-attested: bm25_delete_search, streaming_ingest_e2e). The
+    latest-epoch and liveness resolution is a per-doc groupBy over the
+    SMALL artifacts; postings, the big table, pays one equi-join."""
     from .bm25 import BM25Index, _stats_of
 
     lens_all = spark.read.parquet(f"{index_dir}/doc_lens")
     post_all = spark.read.parquet(f"{index_dir}/postings")
-    del_schema = T.StructType(
-        [
-            T.StructField("doc_id", lens_all.schema["doc_id"].dataType),
-            T.StructField("epoch", T.LongType()),
-        ]
-    )
-    try:
-        deletes = spark.read.schema(del_schema).parquet(f"{index_dir}/deletes")
-    except AnalysisException:
-        deletes = spark.createDataFrame([], del_schema)
-    latest = lens_all.groupBy("doc_id").agg(F.max("epoch").alias("epoch"))
-    del_latest = deletes.groupBy("doc_id").agg(F.max("epoch").alias("__de"))
-    live = (
-        latest.join(del_latest, "doc_id", "left_outer")
-        .where(F.col("__de").isNull() | (F.col("epoch") > F.col("__de")))
-        .select("doc_id", "epoch")
-    )
-    doc_lens = (
-        lens_all.join(live, ["doc_id", "epoch"])
-        .dropDuplicates(["doc_id"])
-        .select("doc_id", "dl")
-    )
-    postings = (
-        post_all.join(live, ["doc_id", "epoch"])
-        .dropDuplicates(["doc_id", "term"])
-        .select("term", "doc_id", "tf")
-    )
+    deletes = _read_deletes(spark, index_dir, lens_all)
+    live = _latest(lens_all, deletes).where(_is_live()).select("doc_id", "epoch")
+    doc_lens, postings = _rows_at(lens_all, post_all, live)
+    doc_lens = doc_lens.select("doc_id", "dl")
+    postings = postings.select("term", "doc_id", "tf")
     term_df = postings.groupBy("term").agg(F.count("*").alias("df"))
     if cache:
         postings = postings.cache()
@@ -382,58 +425,85 @@ def bm25_index_with_deletes(spark, index_dir: str, cache: bool = False):
     return BM25Index(postings, doc_lens, term_df, _stats_of(doc_lens))
 
 
+def _rewrite_bm25(spark, index_dir: str, rewrite) -> dict[str, int]:
+    """Shared body of the two maintenance rewrites: read both artifacts,
+    stage ``rewrite(lens_all, post_all)`` -> (doc_lens, postings), swap
+    both in, recount. Returns {doc_lens_before, postings_before,
+    doc_lens_after, postings_after}. Run with ingest paused: appends that
+    land between the read and the swap would be lost."""
+    from ..sources.files import swap_dir
+
+    lens_all = spark.read.parquet(f"{index_dir}/doc_lens")
+    post_all = spark.read.parquet(f"{index_dir}/postings")
+    counts = {"doc_lens_before": lens_all.count(), "postings_before": post_all.count()}
+    names = ("doc_lens", "postings")
+    # Materialize BOTH staging writes before swapping EITHER artifact: the
+    # postings plan joins an epoch set derived from doc_lens, so swapping
+    # doc_lens first would pull the files out from under the postings job.
+    for name, df in zip(names, rewrite(lens_all, post_all)):
+        df.write.mode("overwrite").parquet(f"{index_dir}/_{name}_staging")
+    for name in names:
+        swap_dir(spark, f"{index_dir}/_{name}_staging", f"{index_dir}/{name}")
+    for name in names:
+        counts[f"{name}_after"] = spark.read.parquet(f"{index_dir}/{name}").count()
+    return counts
+
+
+def bm25_compact_index(spark, index_dir: str) -> dict[str, int]:
+    """LSM-style compaction of the append-only index: rewrite
+    ``postings/`` and ``doc_lens/`` keeping ONLY each doc's latest epoch
+    (and one physical copy of it — crash-replayed duplicate appends are
+    squashed too). Without it, every re-index of a doc grows the
+    artifacts and the reader pays read amplification proportional to the
+    overwrite count. Tombstoned docs keep their latest version (dropping
+    them is :func:`bm25_reclaim_deleted`'s job — the two passes compose in
+    either order).
+
+    Epoch values are PRESERVED, not reset: epochs are monotonically
+    increasing under one checkpoint, so a post-compaction append still
+    supersedes the compacted rows for its doc ids — gated in
+    tests/test_streaming.py. Run from the same paused-ingest maintenance
+    window that owns small-file compaction (sources/files.py
+    compact_table).
+
+    At 100 TB this is one (doc_id, epoch) equi-join per artifact —
+    postings, the big side, shuffles once on its natural key; the latest
+    set (one row per doc — not per version, not per term) is the small
+    side of both joins but still per-doc, so it is left to AQE to
+    broadcast or shuffle rather than forced (a billion-doc corpus must not
+    be driver-collected)."""
+
+    def squash(lens_all, post_all):
+        doc_lens, postings = _rows_at(lens_all, post_all, _latest(lens_all))
+        return (
+            doc_lens.select("doc_id", "dl", "epoch"),
+            postings.select("doc_id", "term", "tf", "epoch"),
+        )
+
+    return _rewrite_bm25(spark, index_dir, squash)
+
+
 def bm25_reclaim_deleted(spark, index_dir: str) -> dict[str, int]:
     """PHYSICAL erasure for the BM25 index: tombstones make a doc
     invisible, but right-to-erasure means the bytes must go — this
     maintenance rewrite drops every row of every DEAD doc (latest indexed
     epoch <= latest tombstone) from ``postings/`` and ``doc_lens/``.
     Live docs keep ALL their version rows (squashing versions is
-    bm25.compact_index's job — the two maintenance passes compose in
-    either order). Tombstones are KEPT: epochs are monotone under one
-    checkpoint, so a tombstone only ever kills already-superseded rows,
-    and a crash-replayed old append must still find its erased ids dead.
-    Same staging + aside-rename swap (and paused-ingest window) as
-    compact_index; reader output is bit-identical before and after
-    (test-pinned). Returns before/after row counts per artifact."""
-    import shutil
-    from pathlib import Path
+    :func:`bm25_compact_index`'s job). Tombstones are KEPT: epochs are
+    monotone under one checkpoint, so a tombstone only ever kills
+    already-superseded rows, and a crash-replayed old append must still
+    find its erased ids dead. Reader output is bit-identical before and
+    after (test-pinned)."""
 
-    lens_all = spark.read.parquet(f"{index_dir}/doc_lens")
-    post_all = spark.read.parquet(f"{index_dir}/postings")
-    latest = lens_all.groupBy("doc_id").agg(F.max("epoch").alias("epoch"))
-    deletes = spark.read.parquet(f"{index_dir}/deletes")
-    del_latest = deletes.groupBy("doc_id").agg(F.max("epoch").alias("__de"))
-    dead = (
-        latest.join(del_latest, "doc_id")
-        .where(F.col("epoch") <= F.col("__de"))
-        .select("doc_id")
-    )
-    counts = {
-        "doc_lens_before": lens_all.count(),
-        "postings_before": post_all.count(),
-    }
-    jobs = (
-        ("doc_lens", lens_all.join(dead, "doc_id", "left_anti")),
-        ("postings", post_all.join(dead, "doc_id", "left_anti")),
-    )
-    base = Path(index_dir)
-    # materialize BOTH staging writes before swapping EITHER artifact:
-    # the dead set derives from doc_lens, so swapping it first would pull
-    # the files out from under the postings job (compact_index doctrine)
-    for name, df in jobs:
-        df.write.mode("overwrite").parquet(str(base / f"_{name}_reclaim"))
-    for name, _ in jobs:
-        final = base / name
-        old = base / f"_{name}_old"
-        if old.exists():
-            shutil.rmtree(old)
-        final.rename(old)
-        (base / f"_{name}_reclaim").rename(final)
-        shutil.rmtree(old)
-        spark.catalog.refreshByPath(str(final))
-    counts["doc_lens_after"] = spark.read.parquet(f"{index_dir}/doc_lens").count()
-    counts["postings_after"] = spark.read.parquet(f"{index_dir}/postings").count()
-    return counts
+    def drop_dead(lens_all, post_all):
+        deletes = _read_deletes(spark, index_dir, lens_all)
+        dead = _latest(lens_all, deletes).where(~_is_live()).select("doc_id")
+        return (
+            lens_all.join(dead, "doc_id", "left_anti"),
+            post_all.join(dead, "doc_id", "left_anti"),
+        )
+
+    return _rewrite_bm25(spark, index_dir, drop_dead)
 
 
 def bm25_compact_deletes(spark, index_dir: str) -> dict[str, int]:
@@ -441,22 +511,14 @@ def bm25_compact_deletes(spark, index_dir: str) -> dict[str, int]:
     epoch (replayed/duplicate delete appends squash to one row). Lower
     tombstones are strictly dominated — max() is what the reader takes —
     so this is unconditionally safe, bounding the log at one row per
-    ever-deleted doc. Same aside-rename swap; run with ingest paused."""
-    import shutil
-    from pathlib import Path
+    ever-deleted doc. Same staging + swap; run with ingest paused."""
+    from ..sources.files import swap_dir
 
     deletes = spark.read.parquet(f"{index_dir}/deletes")
     before = deletes.count()
     squashed = deletes.groupBy("doc_id").agg(F.max("epoch").alias("epoch"))
-    base = Path(index_dir)
-    squashed.write.mode("overwrite").parquet(str(base / "_deletes_compact"))
-    final, old = base / "deletes", base / "_deletes_old"
-    if old.exists():
-        shutil.rmtree(old)
-    final.rename(old)
-    (base / "_deletes_compact").rename(final)
-    shutil.rmtree(old)
-    spark.catalog.refreshByPath(str(final))
+    squashed.write.mode("overwrite").parquet(f"{index_dir}/_deletes_staging")
+    swap_dir(spark, f"{index_dir}/_deletes_staging", f"{index_dir}/deletes")
     return {
         "deletes_before": before,
         "deletes_after": spark.read.parquet(f"{index_dir}/deletes").count(),
@@ -557,14 +619,15 @@ def _ivf_tombstones(spark, path: str, corpus_id: str) -> DataFrame:
 def ivf_reclaim_deleted(spark, path: str, corpus_id: str = "vec_id") -> dict[str, int]:
     """Physically drop tombstoned vectors from the persisted IVF index
     (run from the same paused-ingest maintenance window as
-    knn.ivf_compact; same staging + aside-rename swap). Tombstones are
+    knn.ivf_compact; same staging + swap). Tombstones are
     KEPT after the reclaim — they are terminal under the epoch-free
     append contract, and a crash-replayed old append must still find its
     erased ids dead. Returns {rows_before, rows_after}."""
-    import shutil
     from pathlib import Path
 
     from pyspark.sql.utils import AnalysisException
+
+    from ..sources.files import swap_dir
 
     try:
         idx = spark.read.parquet(path)
@@ -586,13 +649,7 @@ def ivf_reclaim_deleted(spark, path: str, corpus_id: str = "vec_id") -> dict[str
         survivors.write.mode("overwrite").parquet(staging)
     else:
         survivors.write.mode("overwrite").partitionBy("centroid_id").parquet(staging)
-    old = Path(path).parent / f"_{Path(path).name}_old"
-    if old.exists():
-        shutil.rmtree(old)
-    Path(path).rename(old)
-    Path(staging).rename(path)
-    shutil.rmtree(old)
-    spark.catalog.refreshByPath(path)
+    swap_dir(spark, staging, path)
     return {
         "rows_before": before,
         "rows_after": spark.read.parquet(path).count(),

@@ -64,6 +64,7 @@ from .operators import bm25 as BM25
 from .operators import hybrid as HY
 from .operators import knn as KNN
 from .operators.relational import delete_by_ids as _delete_by_ids
+from .sources.files import swap_dir
 
 # A parser maps (filepath, raw bytes) → [(page_number, page_markdown), ...].
 ParserFn = Callable[[str, bytes], list[tuple[int, str]]]
@@ -426,14 +427,13 @@ class VectorPipeline:
 
     def delete_by_ids(self, ids: list[str]) -> None:
         """P4 — rewrite corpus minus ids (parquet has no in-place delete; on
-        Delta this becomes ``DELETE FROM``). Overwrites atomically via a
-        staging write then swap."""
+        Delta this becomes ``DELETE FROM``). A staging write, then the
+        shared aside-rename swap (sources.files.swap_dir): the previous
+        corpus stays on disk until the new one is in place."""
         remaining = _delete_by_ids(self.corpus(), "id", ids)
         staging = self.base / "corpus_staging"
         remaining.write.mode("overwrite").partitionBy("lv1_cat").parquet(str(staging))
-        final = self.base / "corpus"
-        shutil.rmtree(final)
-        staging.rename(final)
+        swap_dir(self.spark, staging, self.base / "corpus")
         self._corpus_cache = None
         self._bm25 = None
 

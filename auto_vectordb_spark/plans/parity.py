@@ -1126,7 +1126,9 @@ def bm25_topk(spark, sf):
     t = load_views(spark, sf)
     from ..functions.text import tokenize
 
-    # Measured dead-end (r12, don't retry): swapping to score_terms_adhoc
+    # Measured dead-end (r12, don't retry; the ad hoc scorer was then
+    # deleted): an index-free scorer that broadcast-prunes the exploded
+    # token stream to query terms before the (term, doc_id) shuffle
     # was 1.5x SLOWER at sf0.1 (min-of-5 1.98 s vs 1.30 s interleaved) —
     # AQE stage reuse already shares the postings exchange between the
     # probe join and the term_df branch, so the index path pays the corpus
@@ -1195,7 +1197,7 @@ def hybrid_search(spark, sf):
     from ..functions.text import tokenize
 
     t = load_views(spark, sf)
-    # index path, not score_terms_adhoc — measured dead-end, see bm25_topk
+    # index path, not an ad hoc scorer — measured dead-end, see bm25_topk
     index = BM25.build_index(t["documents"])
     queries = spark.createDataFrame(BM25_QUERIES, ["query_id", "query_text"])
     terms = queries.select(
@@ -1535,7 +1537,7 @@ def streaming_ingest_e2e(spark, sf):
         q2.processAllAvailable()
         q2.stop()
 
-        idx = BM25.index_from_dir(spark, f"{work}/bm25")
+        idx = RT.bm25_index_with_deletes(spark, f"{work}/bm25")
         n_terms = idx.postings.groupBy("doc_id").agg(F.count("*").alias("n_terms"))
         # explicit schema: when no doc holds a centroid id the appends
         # create the directory with zero part files, and schema INFERENCE
@@ -2063,7 +2065,7 @@ def hybrid_rrf(spark, sf):
     from ..functions.text import tokenize
 
     t = load_views(spark, sf)
-    # index path, not score_terms_adhoc — measured dead-end, see bm25_topk
+    # index path, not an ad hoc scorer — measured dead-end, see bm25_topk
     index = BM25.build_index(t["documents"])
     queries = spark.createDataFrame(BM25_QUERIES, ["query_id", "query_text"])
     terms = queries.select(
@@ -2171,7 +2173,7 @@ def hybrid_fusion_ab(spark, sf):
     from ..functions.text import tokenize
 
     t = load_views(spark, sf)
-    # index path, not score_terms_adhoc — measured dead-end, see bm25_topk
+    # index path, not an ad hoc scorer — measured dead-end, see bm25_topk
     index = BM25.build_index(t["documents"])
     queries = spark.createDataFrame(BM25_QUERIES, ["query_id", "query_text"])
     terms = queries.select(
@@ -4096,7 +4098,7 @@ def rerank_hybrid(spark, sf):
     from ..functions.text import tokenize
 
     t = load_views(spark, sf)
-    # index path, not score_terms_adhoc — measured dead-end, see bm25_topk
+    # index path, not an ad hoc scorer — measured dead-end, see bm25_topk
     index = BM25.build_index(t["documents"])
     queries = spark.createDataFrame(BM25_QUERIES, ["query_id", "query_text"])
     terms = queries.select(
@@ -6492,7 +6494,7 @@ def more_like_this(spark, sf):
         .filter(F.col("doc_id") < _MLT_QUERY_DOCS)
         .select(F.col("doc_id").alias("query_id"), "term")
     )
-    # index path, not score_terms_adhoc — measured dead-end, see bm25_topk
+    # index path, not an ad hoc scorer — measured dead-end, see bm25_topk
     index = BM25.build_index(docs)
     scored = (
         BM25.score_terms(index, qt)

@@ -102,6 +102,39 @@ def compact_table(
     return len(spark.read.parquet(out_path).inputFiles())
 
 
+def swap_dir(spark: SparkSession, staging, final) -> None:
+    """Replace directory ``final`` with the fully written ``staging`` dir —
+    the one swap every maintenance rewrite (BM25 compaction / reclaim /
+    tombstone squash, IVF compaction / reclaim, corpus delete) uses.
+
+    Aside-rename ordering: live -> ``_<name>_old`` (atomic), staging ->
+    live (atomic), then delete ``_old``. A leftover ``_old`` is cleared
+    first: with ``final`` present it is the stale copy of a swap that
+    crashed after its second rename (every caller reads ``final`` before
+    staging, so it never gets here with ``final`` missing).
+
+    Each rename is atomic, but BETWEEN the two the live path is briefly
+    absent — a concurrent reader in that window sees a missing directory,
+    and a crash there leaves the previous contents recoverable only in
+    ``_old`` (rename it back by hand). Readers that must never observe a
+    missing path need a versioned-directory or symlink-flip scheme on a
+    filesystem that supports it; for batch maintenance windows (the
+    intended use, ingest paused) this brief gap is acceptable. Finally the
+    cached file listing of ``final`` is refreshed so later reads see the
+    new files."""
+    import shutil
+    from pathlib import Path
+
+    staging, final = Path(staging), Path(final)
+    old = final.with_name(f"_{final.name}_old")
+    if old.exists():
+        shutil.rmtree(old)
+    final.rename(old)
+    staging.rename(final)
+    shutil.rmtree(old)
+    spark.catalog.refreshByPath(str(final))
+
+
 def write_index(
     df: DataFrame,
     path: str,

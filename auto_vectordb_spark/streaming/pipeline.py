@@ -271,49 +271,30 @@ def incremental_bm25_index(
     text_col: str = "text",
 ) -> StreamingQuery:
     """Streaming BM25 index maintenance: each micro-batch of documents is
-    tokenized once and APPENDED to two parquet artifacts under ``index_dir``
-    — ``postings/`` (doc_id, term, tf, epoch) and ``doc_lens/`` (doc_id, dl,
-    epoch) — giving the reference's ingest→index flow (S11,
-    /root/reference/backend/process/elasticsearch_index.py:145-172) its
-    production shape: the corpus is never re-scanned; only the new batch is
-    processed.
+    APPENDED to the incremental BM25 index under ``index_dir`` through its
+    one writer, :func:`~auto_vectordb_spark.operators.retraction.bm25_index_append`
+    (tagged with the micro-batch epoch) — giving the reference's
+    ingest→index flow (S11, reference backend/process/
+    elasticsearch_index.py:145-172) its production shape: the corpus is
+    never re-scanned; only the new batch is processed. Batch backfills may
+    append into the same dir.
 
     Re-indexing the same doc_id in a later batch OVERWRITES it logically:
-    rows carry the micro-batch epoch and the reader
-    (:func:`auto_vectordb_spark.operators.bm25.index_from_dir`) keeps only
-    each doc's latest epoch — the ES ``_id`` idempotent-overwrite semantics
-    (elasticsearch_index.py:141). Appends + checkpoint make replays safe:
-    a replayed epoch rewrites identical rows and latest-wins dedup absorbs
-    them.
+    the reader (:func:`~auto_vectordb_spark.operators.retraction.bm25_index_with_deletes`)
+    keeps only each doc's latest epoch — the ES ``_id`` idempotent-overwrite
+    semantics (elasticsearch_index.py:141). Appends + checkpoint make
+    replays safe: a replayed epoch rewrites identical rows and latest-wins
+    dedup absorbs them.
 
     At 100 TB: per-batch work is proportional to the batch, appends are
-    partition-parallel, and a periodic compaction job (rewrite keeping max
-    epoch per doc) bounds read amplification — the standard LSM-ish shape.
+    partition-parallel, and a periodic compaction job
+    (retraction.bm25_compact_index) bounds read amplification — the
+    standard LSM-ish shape.
     """
-    from pyspark.sql import functions as F
-
-    from ..functions.text import tokenize
+    from ..operators.retraction import bm25_index_append
 
     def _write(batch: DataFrame, epoch: int) -> None:
-        b = batch.dropDuplicates([id_col])
-        toks = tokenize(F.col(text_col))
-        base = b.select(
-            F.col(id_col).alias("doc_id"),
-            toks.alias("__toks"),
-        )
-        postings = (
-            base.select("doc_id", F.explode("__toks").alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count("*").alias("tf"))
-            .withColumn("epoch", F.lit(epoch))
-        )
-        postings.write.mode("append").parquet(f"{index_dir}/postings")
-        doc_lens = (
-            base.select("doc_id", F.size("__toks").alias("dl"))
-            .filter(F.col("dl") > 0)
-            .withColumn("epoch", F.lit(epoch))
-        )
-        doc_lens.write.mode("append").parquet(f"{index_dir}/doc_lens")
+        bm25_index_append(batch, index_dir, epoch, id_col, text_col)
 
     return (
         stream.writeStream.foreachBatch(_write)

@@ -119,6 +119,37 @@ def test_management_surface(spark, tmp_path):
     assert victim not in [r["id"] for r in p.corpus().collect()]
 
 
+def test_delete_by_ids_failed_swap_keeps_previous_corpus(spark, tmp_path, monkeypatch):
+    """A crash on the rename that puts the rewritten corpus in place must
+    leave the previous corpus on disk (set aside in ``_corpus_old``), not
+    a store with no corpus at all."""
+    from pathlib import Path
+
+    base = tmp_path / "store4"
+    src = tmp_path / "up4"
+    src.mkdir()
+    (src / "a.txt").write_text("alpha")
+    (src / "b.txt").write_text("beta")
+    p = VectorPipeline(spark, str(base), dim=16)
+    p.save_corpus(p.embed(p.parse(str(src))), mode="overwrite")
+    before = sorted(r["id"] for r in p.corpus().collect())
+
+    real_rename = Path.rename
+
+    def crash_on_final_rename(self, target):
+        if Path(target).name == "corpus":
+            raise OSError("injected crash before the new corpus is in place")
+        return real_rename(self, target)
+
+    monkeypatch.setattr(Path, "rename", crash_on_final_rename)
+    with pytest.raises(OSError, match="injected crash"):
+        p.delete_by_ids([before[0]])
+    monkeypatch.undo()
+    kept = base / "_corpus_old"
+    assert list(kept.rglob("*.parquet"))
+    assert sorted(r["id"] for r in spark.read.parquet(str(kept)).collect()) == before
+
+
 def test_category_search_prunes_partitions(pipe):
     """categories= must turn into a PARTITION filter on the lv1_cat-partitioned
     corpus (directories skipped at planning), and only return in-category hits."""

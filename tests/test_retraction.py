@@ -439,8 +439,9 @@ def test_bm25_tombstone_lifecycle(spark, tmp_path):
 
 
 def test_bm25_reader_without_deletes_dir_matches_plain_reader(spark, tmp_path):
-    """No deletes/ artifact yet: the delete-aware reader must degrade to
-    exactly bm25.index_from_dir semantics."""
+    """No deletes/ artifact yet: every doc's latest epoch is live, so the
+    reader scores exactly like a from-scratch in-memory index over the
+    same docs."""
     from auto_vectordb_spark.operators import bm25 as BM25
 
     idx = str(tmp_path / "idx2")
@@ -449,8 +450,41 @@ def test_bm25_reader_without_deletes_dir_matches_plain_reader(spark, tmp_path):
     )
     RT.bm25_index_append(docs, idx, epoch=0)
     got = _bm25_scores(RT.bm25_index_with_deletes(spark, idx), spark)
-    want = _bm25_scores(BM25.index_from_dir(spark, idx), spark)
+    want = _bm25_scores(BM25.build_index(docs), spark)
     assert got == want and len(got) == 2
+
+
+def test_bm25_torn_epoch_keeps_previous_version(spark, tmp_path, monkeypatch):
+    """doc_lens is the commit marker: when the epoch-2 postings write
+    fails, its doc_lens must not land either, and the reader keeps
+    serving the epoch-1 index unchanged (a re-indexed doc must not lose
+    its postings while still counting in N and avgdl)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    idx = str(tmp_path / "torn")
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "alpha delta")], "doc_id long, text string"
+    )
+    RT.bm25_index_append(docs, idx, epoch=1)
+    want = _bm25_scores(RT.bm25_index_with_deletes(spark, idx), spark)
+
+    real_parquet = DataFrameWriter.parquet
+
+    def crash_on_postings(self, path, *args, **kwargs):
+        if str(path).endswith("/postings"):
+            raise RuntimeError("injected crash in the postings write")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", crash_on_postings)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        RT.bm25_index_append(
+            spark.createDataFrame([(1, "beta epsilon")], "doc_id long, text string"),
+            idx,
+            epoch=2,
+        )
+    monkeypatch.undo()
+    got = _bm25_scores(RT.bm25_index_with_deletes(spark, idx), spark)
+    assert got == want and set(got) == {1, 2}
 
 
 # -------------------------------------------------------------- IVF index

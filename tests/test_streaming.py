@@ -359,7 +359,7 @@ def test_incremental_bm25_index_matches_batch_rebuild(spark, tmp_path):
     """Two micro-batches (the second RE-indexes doc 1) must yield search
     results identical to a from-scratch index over the final corpus."""
     from auto_vectordb_spark.operators import bm25 as BM25
-    from auto_vectordb_spark.operators.relational import top_k_per_group
+    from auto_vectordb_spark.operators import retraction as RT
     from auto_vectordb_spark.streaming.pipeline import incremental_bm25_index
 
     src = str(tmp_path / "docs")
@@ -403,7 +403,7 @@ def test_incremental_bm25_index_matches_batch_rebuild(spark, tmp_path):
             for r in scored.collect()
         )
 
-    inc = results(BM25.index_from_dir(spark, idx))
+    inc = results(RT.bm25_index_with_deletes(spark, idx))
     scratch = results(BM25.build_index(final_corpus))
     assert inc == scratch and len(inc) > 0
     # the streamed artifacts carry both epochs for doc 1 (append-only log)
@@ -411,38 +411,85 @@ def test_incremental_bm25_index_matches_batch_rebuild(spark, tmp_path):
     assert lens.filter("doc_id = 1").count() == 2
 
 
+def test_incremental_bm25_stream_and_batch_writers_share_index_dir(spark, tmp_path):
+    """One streamed micro-batch, then a batch append into the SAME index
+    dir (the documented backfill shape): every artifact file carries a
+    long epoch — an int epoch from the stream next to the batch writer's
+    long one makes the reader fail with a parquet column type mismatch —
+    and search equals a from-scratch index over the final corpus."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from auto_vectordb_spark.operators import bm25 as BM25
+    from auto_vectordb_spark.operators import retraction as RT
+    from auto_vectordb_spark.streaming.pipeline import incremental_bm25_index
+
+    src = str(tmp_path / "docs")
+    idx = str(tmp_path / "index")
+    schema = "doc_id long, text string"
+    b1 = spark.createDataFrame(
+        [(1, "spark shuffles data"), (2, "duckdb scans parquet")], schema=schema
+    )
+    b1.write.parquet(src)
+    stream = spark.readStream.schema(b1.schema).parquet(src)
+    q = incremental_bm25_index(stream, idx, str(tmp_path / "ckpt"))
+    q.processAllAvailable()
+    q.stop()
+    # batch epoch 1: re-index doc 1 and add doc 3
+    RT.bm25_index_append(
+        spark.createDataFrame(
+            [(1, "spark broadcasts small tables"), (3, "parquet stores columns")],
+            schema=schema,
+        ),
+        idx,
+        epoch=1,
+    )
+    for name in ("postings", "doc_lens"):
+        files = glob.glob(f"{idx}/{name}/*.parquet")
+        assert files
+        for f in files:
+            assert pq.read_schema(f).field("epoch").type == pa.int64(), f
+
+    final_corpus = spark.createDataFrame(
+        [
+            (1, "spark broadcasts small tables"),
+            (2, "duckdb scans parquet"),
+            (3, "parquet stores columns"),
+        ],
+        schema=schema,
+    )
+    queries = spark.createDataFrame(
+        [(0, "spark parquet"), (1, "small columns")], ["query_id", "query_text"]
+    )
+
+    def results(index):
+        return sorted(
+            (r["query_id"], r["doc_id"], round(r["score"], 9))
+            for r in BM25.search(index, queries, k=3).collect()
+        )
+
+    got = results(RT.bm25_index_with_deletes(spark, idx))
+    assert got == results(BM25.build_index(final_corpus)) and len(got) > 0
+
+
 def test_incremental_bm25_reader_absorbs_replayed_epoch(spark, tmp_path):
     """A crash-replayed micro-batch appends identical rows twice; the
     latest-wins reader must still score as if the batch ran once."""
-    from pyspark.sql import functions as F
-
     from auto_vectordb_spark.operators import bm25 as BM25
+    from auto_vectordb_spark.operators import retraction as RT
 
     idx = str(tmp_path / "index")
     docs = spark.createDataFrame(
         [(1, "spark shuffles data"), (2, "duckdb scans parquet")],
         schema="doc_id long, text string",
     )
-    from auto_vectordb_spark.functions.text import tokenize
-
-    toks = tokenize(F.col("text"))
-    base = docs.select("doc_id", toks.alias("__toks"))
-    postings = (
-        base.select("doc_id", F.explode("__toks").alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
-        .withColumn("epoch", F.lit(0))
-    )
-    doc_lens = (
-        base.select("doc_id", F.size("__toks").alias("dl"))
-        .withColumn("epoch", F.lit(0))
-    )
     for _ in range(2):  # the batch lands TWICE (simulated replay)
-        postings.write.mode("append").parquet(f"{idx}/postings")
-        doc_lens.write.mode("append").parquet(f"{idx}/doc_lens")
+        RT.bm25_index_append(docs, idx, epoch=0)
 
     queries = spark.createDataFrame([(0, "spark parquet")], ["query_id", "query_text"])
-    replayed = BM25.search(BM25.index_from_dir(spark, idx), queries, k=3)
+    replayed = BM25.search(RT.bm25_index_with_deletes(spark, idx), queries, k=3)
     clean = BM25.search(BM25.build_index(docs), queries, k=3)
     as_set = lambda df: {  # noqa: E731
         (r["query_id"], r["doc_id"], round(r["score"], 9)) for r in df.collect()
@@ -455,55 +502,39 @@ def test_compact_index_preserves_scores_and_epoch_order(spark, tmp_path):
     superseded epochs AND replayed duplicates down to one row per live
     (doc, term), and (c) keep epochs so a post-compaction re-index still
     overwrites."""
-    from pyspark.sql import functions as F
-
-    from auto_vectordb_spark.functions.text import tokenize
     from auto_vectordb_spark.operators import bm25 as BM25
+    from auto_vectordb_spark.operators import retraction as RT
 
     idx = str(tmp_path / "index")
-
-    def append_epoch(docs, epoch, times=1):
-        base = docs.select("doc_id", tokenize(F.col("text")).alias("__toks"))
-        postings = (
-            base.select("doc_id", F.explode("__toks").alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.count("*").alias("tf"))
-            .withColumn("epoch", F.lit(epoch))
-        )
-        doc_lens = base.select(
-            "doc_id", F.size("__toks").alias("dl")
-        ).withColumn("epoch", F.lit(epoch))
-        for _ in range(times):
-            postings.write.mode("append").parquet(f"{idx}/postings")
-            doc_lens.write.mode("append").parquet(f"{idx}/doc_lens")
-
     schema = "doc_id long, text string"
-    append_epoch(
+    RT.bm25_index_append(
         spark.createDataFrame(
             [(1, "spark shuffles data"), (2, "duckdb scans parquet")], schema=schema
         ),
+        idx,
         epoch=0,
     )
     # epoch 1 re-indexes doc 1 and lands TWICE (simulated crash replay)
-    append_epoch(
-        spark.createDataFrame([(1, "spark broadcasts small tables")], schema=schema),
-        epoch=1,
-        times=2,
-    )
+    for _ in range(2):
+        RT.bm25_index_append(
+            spark.createDataFrame([(1, "spark broadcasts small tables")], schema=schema),
+            idx,
+            epoch=1,
+        )
 
     queries = spark.createDataFrame(
         [(0, "spark parquet"), (1, "small tables")], ["query_id", "query_text"]
     )
 
     def results():
-        scored = BM25.search(BM25.index_from_dir(spark, idx), queries, k=3)
+        scored = BM25.search(RT.bm25_index_with_deletes(spark, idx), queries, k=3)
         return sorted(
             (r["query_id"], r["doc_id"], round(r["score"], 9))
             for r in scored.collect()
         )
 
     before = results()
-    counts = BM25.compact_index(spark, idx)
+    counts = RT.bm25_compact_index(spark, idx)
     assert results() == before and len(before) > 0
     # doc 1: epoch 0 (3 terms) + 2×epoch 1 (4 terms) → 4; doc 2 stays 3.
     assert counts["postings_before"] == 3 + 3 + 2 * 4
@@ -512,11 +543,13 @@ def test_compact_index_preserves_scores_and_epoch_order(spark, tmp_path):
     # compacted rows keep their epochs → a LATER epoch still wins
     lens = spark.read.parquet(f"{idx}/doc_lens")
     assert {r["epoch"] for r in lens.collect()} == {0, 1}
-    append_epoch(
-        spark.createDataFrame([(1, "entirely new words now")], schema=schema), epoch=2
+    RT.bm25_index_append(
+        spark.createDataFrame([(1, "entirely new words now")], schema=schema),
+        idx,
+        epoch=2,
     )
     post2 = BM25.search(
-        BM25.index_from_dir(spark, idx),
+        RT.bm25_index_with_deletes(spark, idx),
         spark.createDataFrame([(0, "entirely new")], ["query_id", "query_text"]),
         k=3,
     )
@@ -524,39 +557,21 @@ def test_compact_index_preserves_scores_and_epoch_order(spark, tmp_path):
 
 
 def test_compact_index_recovers_stale_old_dirs(spark, tmp_path):
-    """compact_index's aside-rename swap must tolerate leftover _*_old dirs
+    """compaction's aside-rename swap must tolerate leftover _*_old dirs
     from a crashed earlier compaction and never leave the live artifact
     paths absent."""
-    from auto_vectordb_spark.operators import bm25 as BM25
-
-    from pyspark.sql import functions as F
-
-    from auto_vectordb_spark.functions.text import tokenize
+    from auto_vectordb_spark.operators import retraction as RT
 
     docs = spark.createDataFrame(
         [(0, "spark join filter"), (1, "window agg stream")], ["doc_id", "text"]
     )
     idx = str(tmp_path / "bmidx")
-    base = docs.select("doc_id", tokenize(F.col("text")).alias("__toks"))
-    (
-        base.select("doc_id", F.explode("__toks").alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
-        .withColumn("epoch", F.lit(0))
-        .write.mode("append")
-        .parquet(f"{idx}/postings")
-    )
-    (
-        base.select("doc_id", F.size("__toks").alias("dl"))
-        .withColumn("epoch", F.lit(0))
-        .write.mode("append")
-        .parquet(f"{idx}/doc_lens")
-    )
+    RT.bm25_index_append(docs, idx, epoch=0)
     for name in ("doc_lens", "postings"):
         stale = tmp_path / "bmidx" / f"_{name}_old"
         stale.mkdir()
         (stale / "junk").write_text("leftover")
-    counts = BM25.compact_index(spark, idx)
+    counts = RT.bm25_compact_index(spark, idx)
     assert counts["postings_after"] == counts["postings_before"]
     for name in ("doc_lens", "postings"):
         assert (tmp_path / "bmidx" / name).exists()
