@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions import cleanvec as CV
 from ..functions import vector as V
-from ..session import release_materialized
+from ..session import materialized
 
 # per-element quantization for exact (order-independent) centroid means:
 # embeddings are unit-scale floats, 1e7 keeps 7 decimals in int64 with room
@@ -169,37 +169,28 @@ def lloyd(
             [],
         )
     inertia: list[float] = []
-    prev_joined = None
     for _ in range(iters):
         assigned = assign_centroids(vectors, centroids, vec_col=vec_col, id_col=id_col)
         # two actions consume `joined` per round (the centroid-update
         # collect and the inertia aggregate); materialize the assignment
         # once so the corpus assign+self-join runs once per round, not
         # twice (opt guide §2.4). Lloyd at scale caches its working set
-        # per iteration anyway (MLlib does the same).
-        joined = vectors.join(
-            assigned.select(id_col, "cluster_id", "dist"), id_col
-        ).localCheckpoint(eager=True)
-        # release the PREVIOUS round's checkpointed blocks explicitly (r12
-        # ADVICE): relying on Python GC + the async ContextCleaner lets
-        # per-iteration corpus copies pile up in executor storage over many
-        # rounds. The new checkpoint is already materialized (eager=True),
-        # so nothing still reads the old one. (session.release_materialized
-        # unpersists the plan's INTERNAL RDD — df.rdd.unpersist would be a
-        # measured no-op on a localCheckpoint.)
-        if prev_joined is not None:
-            release_materialized(prev_joined)
-        prev_joined = joined
-        stats = centroid_means_exact(joined, "cluster_id", vec_col)
-        agg = joined.agg(F.sum(F.round(F.col("dist") * 1_000_000).try_cast("long")).alias("qi"))
-        inertia.append(agg.first()["qi"] / 1_000_000)
-        new = {r["cluster_id"]: list(r["centroid"]) for r in stats.collect()}
+        # per iteration anyway (MLlib does the same); released with its
+        # round, so per-iteration corpus copies never pile up.
+        with materialized(
+            vectors.join(assigned.select(id_col, "cluster_id", "dist"), id_col),
+            "localCheckpoint",
+        ) as joined:
+            stats = centroid_means_exact(joined, "cluster_id", vec_col)
+            agg = joined.agg(
+                F.sum(F.round(F.col("dist") * 1_000_000).try_cast("long")).alias("qi")
+            )
+            inertia.append(agg.first()["qi"] / 1_000_000)
+            new = {r["cluster_id"]: list(r["centroid"]) for r in stats.collect()}
         # effective k = len(centroids): a tiny slice (n < k rows) seeds
         # fewer than k centroids, and indexing range(k) would IndexError
         centroids = [new.get(i, centroids[i]) for i in range(len(centroids))]
     out = assign_centroids(vectors, centroids, vec_col=vec_col, id_col=id_col)
-    if prev_joined is not None:
-        release_materialized(prev_joined)
     return out, centroids, inertia
 
 

@@ -35,6 +35,7 @@ from ..functions import cleanvec as CV
 from ..functions import hashing as H
 from ..functions import vector as V
 from ..functions.text import shingles, tokenize
+from ..session import materialized, release_materialized
 
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BANDS = 4  # 4 bands × 4 rows
@@ -1130,28 +1131,29 @@ def connected_components(
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionAll(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
         .distinct()
-        .cache()
     )
-    labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    )
-    # Convergence via Σlabel: min-label propagation only ever DECREASES
-    # labels, so an unchanged sum ⇔ a fixed point — one scan-agg on the
-    # (checkpointed, tiny) label table instead of a join-and-count per round.
-    prev_sum = None
-    for _ in range(max_iterations):
-        prop = (
-            edges.join(labels, edges["src"] == labels["node"])
-            .select(F.col("dst").alias("node"), "label")
+    with materialized(edges, "persist") as edges:
+        labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
+            "label", F.col("node")
         )
-        labels = (
-            labels.unionAll(prop).groupBy("node").agg(F.min("label").alias("label"))
-        ).localCheckpoint(eager=True)
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    edges.unpersist()
+        # Convergence via Σlabel: min-label propagation only ever DECREASES
+        # labels, so an unchanged sum ⇔ a fixed point — one scan-agg on the
+        # (checkpointed, tiny) label table, not a join-and-count per round.
+        prev_sum = None
+        for _ in range(max_iterations):
+            prop = (
+                edges.join(labels, edges["src"] == labels["node"])
+                .select(F.col("dst").alias("node"), "label")
+            )
+            prev = labels
+            labels = (
+                labels.unionAll(prop).groupBy("node").agg(F.min("label").alias("label"))
+            ).localCheckpoint(eager=True)
+            release_materialized(prev)  # rolling state: round i is now unread
+            cur_sum = labels.agg(F.sum("label")).collect()[0][0]
+            if cur_sum == prev_sum:
+                break
+            prev_sum = cur_sum
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("component_id"))
 
 

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import release_materialized
+from ..session import materialized, release_materialized
 
 
 def pagerank(
@@ -51,75 +51,73 @@ def pagerank(
     rank table — no new shuffle of the edge table.
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    nodes = (
+    all_nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
-    n = nodes.count()
-    if n == 0:
-        # e.g. copurchase_edges with a high min_support: a legitimate
-        # empty graph, not an error
-        return nodes.select("node", F.lit(0.0).alias("rank"))
-    out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    # Pre-partition the edge table by the join key ONCE (r13, guide §2.4):
-    # the per-iteration contribution join re-shuffled the EDGE table — the
-    # big side — every round when the rank side was too large to
-    # broadcast; a checkpoint preserves its outputPartitioning, so all
-    # ``iterations`` joins are satisfied without another edge exchange
-    # (ranks leave each round partitioned by node from the groupBy, which
-    # satisfies the rank side too). One exchange per iteration remains:
-    # the contribution groupBy(dst).
-    ed = e.join(out_deg, "src").repartition("src").localCheckpoint()
-    dangling = nodes.join(
-        out_deg.select(F.col("src").alias("node")), "node", "left_anti"
-    ).localCheckpoint()
-    has_dangling = dangling.limit(1).count() > 0
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    base = (1.0 - damping) / n
-    for _ in range(iterations):
-        dangling_mass = 0.0
-        if has_dangling:
-            dm_row = (
-                ranks.join(dangling, "node", "left_semi")
-                .agg(F.sum("rank").alias("dm"))
-                .first()
-            )
-            dangling_mass = dm_row["dm"] or 0.0
-        step_base = base + damping * dangling_mass / n
-        contribs = (
-            ed.join(ranks, ed["src"] == ranks["node"])
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") / F.col("deg")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("s"))
-        )
-        prev = ranks
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(step_base)
-                    + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-        # the new round's ranks are materialized: release the previous
-        # round's blocks so iterations don't pile rank tables up in
-        # executor storage (same rule as cluster.lloyd; first round's
-        # `prev` is the un-checkpointed seed projection — a no-op)
-        release_materialized(prev)
-    # the returned frame is checkpointed; the loop inputs are not needed
-    # to recompute it
-    release_materialized(ed)
-    release_materialized(dangling)
-    release_materialized(nodes)
-    return ranks
+    with materialized(all_nodes, "localCheckpoint") as nodes:
+        n = nodes.count()
+        if n == 0:
+            # e.g. copurchase_edges with a high min_support: a legitimate
+            # empty graph, not an error (lazy: the checkpoint is released)
+            return all_nodes.select("node", F.lit(0.0).alias("rank"))
+        out_deg = e.groupBy("src").agg(F.count("*").alias("deg"))
+        # Pre-partition the edge table by the join key ONCE (r13, guide
+        # §2.4): the per-iteration contribution join re-shuffled the EDGE
+        # table — the big side — every round when the rank side was too
+        # large to broadcast; a checkpoint preserves its
+        # outputPartitioning, so all ``iterations`` joins are satisfied
+        # without another edge exchange (ranks leave each round
+        # partitioned by node from the groupBy, which satisfies the rank
+        # side too). One exchange per iteration remains: the contribution
+        # groupBy(dst).
+        with materialized(
+            e.join(out_deg, "src").repartition("src"), "localCheckpoint"
+        ) as ed, materialized(
+            nodes.join(
+                out_deg.select(F.col("src").alias("node")), "node", "left_anti"
+            ),
+            "localCheckpoint",
+        ) as dangling:
+            has_dangling = dangling.limit(1).count() > 0
+            ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
+            base = (1.0 - damping) / n
+            for _ in range(iterations):
+                dangling_mass = 0.0
+                if has_dangling:
+                    dm_row = (
+                        ranks.join(dangling, "node", "left_semi")
+                        .agg(F.sum("rank").alias("dm"))
+                        .first()
+                    )
+                    dangling_mass = dm_row["dm"] or 0.0
+                step_base = base + damping * dangling_mass / n
+                contribs = (
+                    ed.join(ranks, ed["src"] == ranks["node"])
+                    .select(
+                        F.col("dst").alias("node"),
+                        (F.col("rank") / F.col("deg")).alias("c"),
+                    )
+                    .groupBy("node")
+                    .agg(F.sum("c").alias("s"))
+                )
+                prev = ranks
+                ranks = (
+                    nodes.join(contribs, "node", "left")
+                    .select(
+                        "node",
+                        (
+                            F.lit(step_base)
+                            + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
+                        ).alias("rank"),
+                    )
+                    .localCheckpoint()
+                )
+                # rolling state (first round's `prev` is the un-checkpointed
+                # seed projection — a no-op)
+                release_materialized(prev)
+    return ranks  # reads only the last round's blocks: the caller's
 
 
 def copurchase_edges(lineitem: DataFrame, min_support: int = 2) -> DataFrame:

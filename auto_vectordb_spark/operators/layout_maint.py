@@ -42,7 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import release_materialized
+from ..session import materialized
 from .layout import (
     GRID_BITS,
     PROBE_X,
@@ -55,33 +55,6 @@ from .layout import (
 from .schedule import global_rank, ntile_expr
 
 _MAIN_SCHEMA = "{pay} long, xg long, yg long, z_bucket long"
-
-
-def _materialize_corpus(df: DataFrame) -> DataFrame:
-    """Materialize a corpus-sized, multiply-consumed working set with
-    ``persist(StorageLevel.DISK_ONLY)`` + a count() — the posture the r12
-    verdict (#3) asked to settle for the two z-order maintenance paths,
-    measured head-to-head at 20M rows (200x the bench SF; full table in
-    OPTIMIZATION_r13.md): within 1% of an eager localCheckpoint, and it
-    KEEPS LINEAGE, so a lost executor recomputes its blocks instead of
-    killing the job (non-replicated lineage-free blocks were the r12
-    verdict's 100 TB objection to the corpus-sized localCheckpoint).
-    MEMORY_AND_DISK (eviction churn) and no materialization (every
-    consumer re-derives from the source scan) measured slower. Safe here
-    because these frames read only immutable inputs (the
-    self-overwrite-hazard frame below stays a localCheckpoint precisely
-    because its recompute would read overwritten files — the lineage CUT
-    is the point there).
-
-    Release the returned frame with ``session.release_materialized`` once
-    every consumer has executed — corpus-sized blocks must not outlive the
-    operator call (the same explicit-release rule cluster.lloyd follows).
-    """
-    from pyspark import StorageLevel
-
-    out = df.persist(StorageLevel.DISK_ONLY)
-    out.count()
-    return out
 
 
 def _clean(events: DataFrame, id_col: str, x_col: str, ts_col: str) -> DataFrame:
@@ -156,144 +129,135 @@ def zorder_compaction_apply(
     # the session's parallelism (conditional — a no-op on a
     # well-partitioned 100 TB scan) and materialized ONCE; stats, plan,
     # base write, delta mapping and side write all derive from it.
-    ev = _materialize_corpus(
-        fan_out_small_scan(_clean(events, id_col, x_col, ts_col)).select(
-            F.col(id_col),
-            F.col(x_col).cast("long").alias("__x"),
-            _hour_index(ts_col).alias("__y"),
-            (F.pmod(F.col(id_col), F.lit(delta_mod)) == 0).alias("__is_delta"),
-        )
+    narrow = fan_out_small_scan(_clean(events, id_col, x_col, ts_col)).select(
+        F.col(id_col),
+        F.col(x_col).cast("long").alias("__x"),
+        _hour_index(ts_col).alias("__y"),
+        (F.pmod(F.col(id_col), F.lit(delta_mod)) == 0).alias("__is_delta"),
     )
-    # ONE min-max aggregate serves zorder_write's grid, the plan's grid
-    # and the delta mapping (the r11 shape computed it three times —
-    # identical input set, identical values). Collected as int literals:
-    # the grid arithmetic stays whole-stage-codegen'd with no broadcast
-    # join node, and the values are exact int64 either way.
-    row = ev.where(~F.col("__is_delta")).agg(
-        F.min("__x").alias("__xmin"),
-        F.max("__x").alias("__xmax"),
-        F.min("__y").alias("__ymin"),
-        F.max("__y").alias("__ymax"),
-    ).first()
-    shift = 2 * GRID_BITS - bucket_bits
-    if row is None or row["__xmin"] is None:
-        # Empty base ⇒ empty plan ⇒ nothing applied (an initial write,
-        # not a compaction) — identical to the broadcast-join shape,
-        # where the __xmin-isNotNull filter killed every row. The empty
-        # writes still run so main/side exist for the report read.
-        gz = ev.select(
-            id_col,
-            F.lit(None).cast("long").alias("xg"),
-            F.lit(None).cast("long").alias("yg"),
-            F.lit(None).cast("long").alias("z_bucket"),
-            "__is_delta",
-        ).where(F.lit(False))
-    else:
-        xmin, xmax = int(row["__xmin"]), int(row["__xmax"])
-        ymin, ymax = int(row["__ymin"]), int(row["__ymax"])
-        # Frozen-grid mapping, clamped into the base range — byte-identical
-        # arithmetic to zorder_compaction_plan (layout.py documents the
-        # input-clamp overflow guard). Base rows are inside [vmin, vmax] by
-        # construction, so the clamp is the identity for them and this one
-        # expression serves both the base layout write and the delta
-        # mapping.
-        xg = F.expr(
-            grid_expr_sql(f"least(greatest(__x, {xmin}), {xmax})", str(xmin), str(xmax))
-        )
-        yg = F.expr(
-            grid_expr_sql(f"least(greatest(__y, {ymin}), {ymax})", str(ymin), str(ymax))
-        )
-        gz = ev.select(
-            id_col,
-            xg.alias("xg"),
-            yg.alias("yg"),
-            F.shiftright(morton16(xg, yg), shift).cast("long").alias("z_bucket"),
-            "__is_delta",
-        )
-
-    # Exchange widths pinned to the bucket count — see layout.zorder_write:
-    # an AQE-coalesced single task would write every bucket dir serially.
-    def _write_base() -> None:
-        gz.where(~F.col("__is_delta")).select(
-            id_col, "xg", "yg", "z_bucket"
-        ).repartition(2 ** bucket_bits, "z_bucket").write.mode(
-            "overwrite"
-        ).partitionBy("z_bucket").parquet(main_path)
-
-    # The base-layout write and the plan aggregate are independent reads
-    # of the checkpointed frame — overlap them so the plan's tiny agg
-    # back-fills executors idled by the write's commit tail (guide §2.6).
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_base = pool.submit(_write_base)
-        plan = (
-            gz.groupBy("z_bucket")
-            .agg(
-                F.count(F.when(~F.col("__is_delta"), 1)).alias("base_rows"),
-                F.count(F.when(F.col("__is_delta"), 1)).alias("delta_rows"),
+    with materialized(narrow, "DISK_ONLY") as ev:  # every consumer inside
+        # ONE min-max aggregate serves zorder_write's grid, the plan's grid
+        # and the delta mapping (the r11 shape computed it three times —
+        # identical input set, identical values). Collected as int literals:
+        # the grid arithmetic stays whole-stage-codegen'd with no broadcast
+        # join node, and the values are exact int64 either way.
+        row = ev.where(~F.col("__is_delta")).agg(
+            F.min("__x").alias("__xmin"),
+            F.max("__x").alias("__xmax"),
+            F.min("__y").alias("__ymin"),
+            F.max("__y").alias("__ymax"),
+        ).first()
+        shift = 2 * GRID_BITS - bucket_bits
+        if row is None or row["__xmin"] is None:
+            # Empty base ⇒ empty plan ⇒ nothing applied (an initial write,
+            # not a compaction) — identical to the broadcast-join shape,
+            # where the __xmin-isNotNull filter killed every row. The empty
+            # writes still run so main/side exist for the report read.
+            gz = ev.select(
+                id_col,
+                F.lit(None).cast("long").alias("xg"),
+                F.lit(None).cast("long").alias("yg"),
+                F.lit(None).cast("long").alias("z_bucket"),
+                "__is_delta",
+            ).where(F.lit(False))
+        else:
+            xmin, xmax = int(row["__xmin"]), int(row["__xmax"])
+            ymin, ymax = int(row["__ymin"]), int(row["__ymax"])
+            # Frozen-grid mapping, clamped into the base range — byte-identical
+            # arithmetic to zorder_compaction_plan (layout.py documents the
+            # input-clamp overflow guard). Base rows are inside [vmin, vmax] by
+            # construction, so the clamp is the identity for them and this one
+            # expression serves both the base layout write and the delta
+            # mapping.
+            xg = F.expr(
+                grid_expr_sql(f"least(greatest(__x, {xmin}), {xmax})", str(xmin), str(xmax))
             )
-            .select(
-                "z_bucket",
-                "base_rows",
-                "delta_rows",
-                F.when(
-                    (F.col("base_rows") == 0)
-                    | (
-                        F.col("delta_rows") * 100
-                        >= F.col("base_rows") * rewrite_pct
-                    ),
-                    F.lit("rewrite"),
-                )
-                .otherwise(F.lit("defer"))
-                .alias("action"),
+            yg = F.expr(
+                grid_expr_sql(f"least(greatest(__y, {ymin}), {ymax})", str(ymin), str(ymax))
             )
-            .localCheckpoint(eager=True)  # one decide pass; three consumers
-        )
-        rewrite_buckets = F.broadcast(
-            plan.where(F.col("action") == "rewrite").select("z_bucket")
-        )
-        defer_buckets = F.broadcast(
-            plan.where(F.col("action") == "defer").select("z_bucket")
-        )
-        dz = gz.where(F.col("__is_delta")).select(id_col, "xg", "yg", "z_bucket")
+            gz = ev.select(
+                id_col,
+                xg.alias("xg"),
+                yg.alias("yg"),
+                F.shiftright(morton16(xg, yg), shift).cast("long").alias("z_bucket"),
+                "__is_delta",
+            )
 
-        # The side write depends only on the plan + the checkpointed frame
-        # and touches its own path — launch it now, overlapping the rest
-        # of the main-path work (guide §2.6).
-        def _write_side() -> None:
-            dz.join(defer_buckets, "z_bucket", "left_semi").select(
+        # Exchange widths pinned to the bucket count — see layout.zorder_write:
+        # an AQE-coalesced single task would write every bucket dir serially.
+        def _write_base() -> None:
+            gz.where(~F.col("__is_delta")).select(
                 id_col, "xg", "yg", "z_bucket"
             ).repartition(2 ** bucket_bits, "z_bucket").write.mode(
                 "overwrite"
-            ).partitionBy("z_bucket").parquet(side_path)
+            ).partitionBy("z_bucket").parquet(main_path)
 
-        f_side = pool.submit(_write_side)
-        f_base.result()  # stored read-back needs the base layout on disk
+        # The base-layout write and the plan aggregate are independent reads
+        # of the checkpointed frame — overlap them so the plan's tiny agg
+        # back-fills executors idled by the write's commit tail (guide §2.6).
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            f_base = pool.submit(_write_base)
+            plan = (
+                gz.groupBy("z_bucket")
+                .agg(
+                    F.count(F.when(~F.col("__is_delta"), 1)).alias("base_rows"),
+                    F.count(F.when(F.col("__is_delta"), 1)).alias("delta_rows"),
+                )
+                .select(
+                    "z_bucket",
+                    "base_rows",
+                    "delta_rows",
+                    F.when(
+                        (F.col("base_rows") == 0)
+                        | (
+                            F.col("delta_rows") * 100
+                            >= F.col("base_rows") * rewrite_pct
+                        ),
+                        F.lit("rewrite"),
+                    )
+                    .otherwise(F.lit("defer"))
+                    .alias("action"),
+                )
+                .localCheckpoint(eager=True)  # one decide pass; three consumers
+            )
+            rewrite_buckets = F.broadcast(
+                plan.where(F.col("action") == "rewrite").select("z_bucket")
+            )
+            defer_buckets = F.broadcast(
+                plan.where(F.col("action") == "defer").select("z_bucket")
+            )
+            dz = gz.where(F.col("__is_delta")).select(id_col, "xg", "yg", "z_bucket")
 
-        schema = _MAIN_SCHEMA.format(pay=id_col)
-        stored = spark.read.schema(schema).parquet(main_path)
-        merged = (
-            stored.join(rewrite_buckets, "z_bucket", "left_semi")
-            .unionByName(
+            # The side write depends only on the plan + the checkpointed frame
+            # and touches its own path — launch it now, overlapping the rest
+            # of the main-path work (guide §2.6).
+            def _write_side() -> None:
+                dz.join(defer_buckets, "z_bucket", "left_semi").select(
+                    id_col, "xg", "yg", "z_bucket"
+                ).repartition(2 ** bucket_bits, "z_bucket").write.mode(
+                    "overwrite"
+                ).partitionBy("z_bucket").parquet(side_path)
+
+            f_side = pool.submit(_write_side)
+            f_base.result()  # stored read-back needs the base layout on disk
+
+            schema = _MAIN_SCHEMA.format(pay=id_col)
+            stored = spark.read.schema(schema).parquet(main_path)
+            merge = stored.join(rewrite_buckets, "z_bucket", "left_semi").unionByName(
                 dz.join(rewrite_buckets, "z_bucket", "left_semi").select(
                     "z_bucket", id_col, "xg", "yg"
                 )
             )
-            .localCheckpoint(eager=True)
-        )
-        # dynamic overwrite scoped to THIS write via the writer option (r11
-        # ADVICE #1): mutating the session conf, even set/restore in
-        # finally, races concurrent writers on a shared SparkSession.
-        merged.select(id_col, "xg", "yg", "z_bucket").repartition(
-            2 ** bucket_bits, "z_bucket"
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("z_bucket").parquet(main_path)
-        f_side.result()
-    # every consumer of the corpus-sized frames has executed (writes
-    # committed, plan checkpointed): release their blocks — corpus-sized
-    # storage must not outlive the operator call (r12 verdict #2 caveat)
-    release_materialized(merged)
-    release_materialized(ev)
+            with materialized(merge, "localCheckpoint") as merged:
+                # dynamic overwrite scoped to THIS write via the writer option
+                # (r11 ADVICE #1): mutating the session conf, even set/restore
+                # in finally, races concurrent writers on a shared SparkSession.
+                merged.select(id_col, "xg", "yg", "z_bucket").repartition(
+                    2 ** bucket_bits, "z_bucket"
+                ).write.mode("overwrite").option(
+                    "partitionOverwriteMode", "dynamic"
+                ).partitionBy("z_bucket").parquet(main_path)
+            f_side.result()
     return plan
 
 
@@ -415,24 +379,27 @@ def zorder_compaction_cycle2(
     rewrite2 = F.broadcast(
         plan2.where(F.col("action") == "rewrite").select("z_bucket")
     )
-    merged = (
-        main.join(rewrite2, "z_bucket", "left_semi")
-        .unionByName(side.join(rewrite2, "z_bucket", "left_semi"))
-        .localCheckpoint(eager=True)
-    )
-    remaining = side.join(rewrite2, "z_bucket", "left_anti").localCheckpoint(
-        eager=True
-    )
-    # writer-scoped dynamic overwrite (r11 ADVICE #1) — see the apply step;
-    # exchange width pinned to the bucket count (see layout.zorder_write)
-    merged.select(id_col, "xg", "yg", "z_bucket").repartition(
-        2 ** bucket_bits, "z_bucket"
-    ).write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("z_bucket").parquet(main_path)
-    remaining.select(id_col, "xg", "yg", "z_bucket").repartition(
-        2 ** bucket_bits, "z_bucket"
-    ).write.mode("overwrite").partitionBy("z_bucket").parquet(side_path)
+    # both taken BEFORE either write: each reads a path the writes below
+    # overwrite (the self-overwrite hazard)
+    with materialized(
+        main.join(rewrite2, "z_bucket", "left_semi").unionByName(
+            side.join(rewrite2, "z_bucket", "left_semi")
+        ),
+        "localCheckpoint",
+    ) as merged, materialized(
+        side.join(rewrite2, "z_bucket", "left_anti"), "localCheckpoint"
+    ) as remaining:
+        # writer-scoped dynamic overwrite (r11 ADVICE #1) — see the apply
+        # step; exchange width pinned to the bucket count (see
+        # layout.zorder_write)
+        merged.select(id_col, "xg", "yg", "z_bucket").repartition(
+            2 ** bucket_bits, "z_bucket"
+        ).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("z_bucket").parquet(main_path)
+        remaining.select(id_col, "xg", "yg", "z_bucket").repartition(
+            2 ** bucket_bits, "z_bucket"
+        ).write.mode("overwrite").partitionBy("z_bucket").parquet(side_path)
     return compaction_report(
         spark, main_path, side_path, plan2, id_col=id_col
     )
@@ -562,55 +529,51 @@ def zorder_write_ranged(
     # the stats agg and both of global_rank's actions (boundary sketch
     # collect, consumer write) recompute only the cheap grid/Morton map
     # over the checkpointed blocks.
-    ev = _materialize_corpus(
-        fan_out_small_scan(_clean(events, id_col, x_col, ts_col)).select(
-            F.col(id_col),
-            F.col(x_col).cast("long").alias("__x"),
-            _hour_index(ts_col).alias("__y"),
-        )
+    narrow = fan_out_small_scan(_clean(events, id_col, x_col, ts_col)).select(
+        F.col(id_col),
+        F.col(x_col).cast("long").alias("__x"),
+        _hour_index(ts_col).alias("__y"),
     )
-    row = ev.agg(
-        F.min("__x").alias("__xmin"),
-        F.max("__x").alias("__xmax"),
-        F.min("__y").alias("__ymin"),
-        F.max("__y").alias("__ymax"),
-    ).first()
-    if row is None or row["__xmin"] is None:
-        # nothing survived the NULL filter: the empty write still runs so
-        # the table exists for the probe (schema-correct empty frame)
-        z = ev.select(
-            id_col,
-            F.lit(None).cast("long").alias("xg"),
-            F.lit(None).cast("long").alias("yg"),
-            F.lit(None).cast("long").alias("z"),
-        ).where(F.lit(False))
-    else:
-        # stats as int literals: exact int64 either way, and the grid
-        # arithmetic stays codegen'd with no broadcast-join node
-        xmin, xmax = int(row["__xmin"]), int(row["__xmax"])
-        ymin, ymax = int(row["__ymin"]), int(row["__ymax"])
-        xg = F.expr(grid_expr_sql("__x", str(xmin), str(xmax)))
-        yg = F.expr(grid_expr_sql("__y", str(ymin), str(ymax)))
-        z = ev.select(
-            id_col,
-            xg.alias("xg"),
-            yg.alias("yg"),
-            morton16(xg, yg).alias("z"),
-        )
-    ranked = global_rank(z, "z", id_col)
-    chunked = ranked.withColumn(
-        "z_file", ntile_expr("__r", "__n", n_files).cast("long")
-    ).drop("__r", "__n")
-    # exchange width pinned to the file count (see layout.zorder_write):
-    # an AQE-coalesced single task would sort+write all chunks serially
-    chunked.select(id_col, "xg", "yg", "z", "z_file").repartition(
-        n_files, "z_file"
-    ).sortWithinPartitions("z").write.mode("overwrite").partitionBy(
-        "z_file"
-    ).parquet(path)
-    # stats agg, global_rank's sketch and the write have all executed:
-    # release the corpus-sized blocks (see _materialize_corpus)
-    release_materialized(ev)
+    with materialized(narrow, "DISK_ONLY") as ev:  # every consumer inside
+        row = ev.agg(
+            F.min("__x").alias("__xmin"),
+            F.max("__x").alias("__xmax"),
+            F.min("__y").alias("__ymin"),
+            F.max("__y").alias("__ymax"),
+        ).first()
+        if row is None or row["__xmin"] is None:
+            # nothing survived the NULL filter: the empty write still runs so
+            # the table exists for the probe (schema-correct empty frame)
+            z = ev.select(
+                id_col,
+                F.lit(None).cast("long").alias("xg"),
+                F.lit(None).cast("long").alias("yg"),
+                F.lit(None).cast("long").alias("z"),
+            ).where(F.lit(False))
+        else:
+            # stats as int literals: exact int64 either way, and the grid
+            # arithmetic stays codegen'd with no broadcast-join node
+            xmin, xmax = int(row["__xmin"]), int(row["__xmax"])
+            ymin, ymax = int(row["__ymin"]), int(row["__ymax"])
+            xg = F.expr(grid_expr_sql("__x", str(xmin), str(xmax)))
+            yg = F.expr(grid_expr_sql("__y", str(ymin), str(ymax)))
+            z = ev.select(
+                id_col,
+                xg.alias("xg"),
+                yg.alias("yg"),
+                morton16(xg, yg).alias("z"),
+            )
+        ranked = global_rank(z, "z", id_col)
+        chunked = ranked.withColumn(
+            "z_file", ntile_expr("__r", "__n", n_files).cast("long")
+        ).drop("__r", "__n")
+        # exchange width pinned to the file count (see layout.zorder_write):
+        # an AQE-coalesced single task would sort+write all chunks serially
+        chunked.select(id_col, "xg", "yg", "z", "z_file").repartition(
+            n_files, "z_file"
+        ).sortWithinPartitions("z").write.mode("overwrite").partitionBy(
+            "z_file"
+        ).parquet(path)
 
 
 def probe_z_intervals(

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions import cleanvec as CV
 from ..functions import vector as V
+from ..session import materialized
 from .cluster import sqdist
 from .relational import top_k_per_group
 
@@ -124,11 +125,10 @@ def pq_codebooks_kmeans(
     # The validated-vector projection feeds first(), count() AND every
     # per-subspace KMeans fit (each fit = many iterative jobs): persist it
     # once instead of re-scanning + re-validating the source per action
-    # (opt guide §2.4/§5 — reused AND expensive to recompute; unpersisted
-    # before return). Partitioning is untouched so the fits see the exact
-    # same data layout (and therefore centers) as the sequential path.
-    cached = df.select(v.alias("v")).persist()
-    try:
+    # (opt guide §2.4/§5 — reused AND expensive to recompute; released on
+    # exit). Partitioning is untouched so the fits see the exact same data
+    # layout (and therefore centers) as the sequential path.
+    with materialized(df.select(v.alias("v")), "persist") as cached:
         row = cached.first()
         if row is None:
             return []  # empty training slice — same degenerate contract as seed
@@ -163,8 +163,6 @@ def pq_codebooks_kmeans(
 
         with ThreadPoolExecutor(max_workers=min(4, m)) as pool:
             return list(pool.map(fit, range(m)))
-    finally:
-        cached.unpersist()
 
 
 def _sub_argmin(subvec, codebook: list[list[float]], round_decimals: int = 6):

@@ -398,7 +398,7 @@ def bm25_delete_docs(
     )
 
 
-def bm25_index_with_deletes(spark, index_dir: str, cache: bool = False):
+def bm25_index_with_deletes(spark, index_dir: str):
     """THE reader of the incremental BM25 index: a :class:`BM25Index` over
     each LIVE doc's latest epoch (crash-replay dedup included) — a doc is
     live iff its latest indexed epoch is strictly greater than its latest
@@ -418,10 +418,6 @@ def bm25_index_with_deletes(spark, index_dir: str, cache: bool = False):
     doc_lens = doc_lens.select("doc_id", "dl")
     postings = postings.select("term", "doc_id", "tf")
     term_df = postings.groupBy("term").agg(F.count("*").alias("df"))
-    if cache:
-        postings = postings.cache()
-        doc_lens = doc_lens.cache()
-        term_df = term_df.cache()
     return BM25Index(postings, doc_lens, term_df, _stats_of(doc_lens))
 
 

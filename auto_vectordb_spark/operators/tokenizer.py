@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize
+from ..session import release_materialized
 
 END_OF_WORD = "</w>"
 
@@ -210,7 +211,8 @@ def bpe_train(
                 pattern,
                 (left + right).replace("\\", "\\\\").replace("$", "\\$"),
             )
-        vocab = vocab.withColumn("sym", sym_col).localCheckpoint()
+        prev, vocab = vocab, vocab.withColumn("sym", sym_col).localCheckpoint()
+        release_materialized(prev)  # rolling state: round i is now unread
     merges_df = spark.createDataFrame(
         merges, "rank int, left string, right string, freq bigint"
     )

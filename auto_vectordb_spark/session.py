@@ -1,16 +1,29 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, and the one lifecycle for
+the storage blocks operators materialize.
 
-Local-mode defaults match the test/bench environment (local[32], single JVM);
-on a real cluster the same settings remain sane: AQE handles skew/coalesce at
-runtime, Arrow speeds every pandas_udf, UTC pins timestamp semantics for
-cross-engine (DuckDB-oracle) comparability.
+Local-mode defaults size the session to the host (``local[<all cores>]``,
+one JVM; the tests and benchmarks run on a 4-core host); on a real cluster
+the same settings remain sane: AQE handles skew/coalesce at runtime, Arrow
+speeds every pandas_udf, UTC pins timestamp semantics for cross-engine
+(DuckDB-oracle) comparability.
+
+Storage lifecycle — each working set materialized in ``operators/``,
+``streaming/`` and ``pipeline.py`` follows one rule: one-shot (materialize
+→ several consumers → done) is ``with materialized(df, posture)``, released
+on exit, raise included; rolling loop state (round i+1 reads round i)
+releases the previous round once the next one is materialized; blocks the
+returned DataFrame still reads belong to the caller.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
+from typing import Literal
 
-from pyspark.sql import SparkSession
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -70,11 +83,8 @@ def release_materialized(df) -> None:
       not the materialized one — measured: storage unchanged. Unpersist
       the plan's RDD directly.
 
-    Best-effort by design (wrong-shape plans are left to the async
-    ContextCleaner, which eventually frees them once the Python proxy is
-    collected): operators call this when a corpus-sized working set has
-    served every consumer, so blocks never pile up across iterations or
-    outlive the operator call.
+    Best-effort by design: a frame of any other shape is left to the
+    async ContextCleaner, which frees it once the Python proxy is collected.
     """
     try:
         df.unpersist(False)
@@ -86,3 +96,39 @@ def release_materialized(df) -> None:
             node.rdd().unpersist(False)
     except Exception:  # noqa: BLE001
         pass
+
+
+@contextmanager
+def materialized(
+    df: DataFrame, posture: Literal["localCheckpoint", "DISK_ONLY", "persist"]
+) -> Iterator[DataFrame]:
+    """Materialize ``df`` eagerly, yield the materialized frame, and
+    :func:`release_materialized` it on exit — also when the body raises.
+
+    - ``"DISK_ONLY"``: ``persist(StorageLevel.DISK_ONLY)`` + count(), the
+      posture for corpus-sized, multiply-consumed working sets. Measured
+      at 20M rows (OPTIMIZATION_r13.md) it is within 1% of an eager
+      localCheckpoint and KEEPS LINEAGE: a lost executor recomputes its
+      blocks instead of killing the job. MEMORY_AND_DISK (eviction churn)
+      and no materialization (every consumer rescans the source) measured
+      slower.
+    - ``"localCheckpoint"``: ``localCheckpoint(eager=True)`` cuts the
+      lineage, so its blocks die with their executor; the z-order paths
+      keep it only where a recompute would read files they overwrite.
+    - ``"persist"``: ``persist()`` + count(), for small working sets such
+      as an MLlib training slice.
+    """
+    if posture == "localCheckpoint":
+        out = df.localCheckpoint(eager=True)
+    elif posture == "DISK_ONLY":
+        out = df.persist(StorageLevel.DISK_ONLY)
+    elif posture == "persist":
+        out = df.persist()
+    else:
+        raise ValueError(f"unknown materialization posture: {posture!r}")
+    try:
+        if posture != "localCheckpoint":
+            out.count()
+        yield out
+    finally:
+        release_materialized(out)
