@@ -53,7 +53,9 @@ class BM25Index:
     # scoring with it is ONE Spark job (stats ride into the query plan as a
     # broadcast 1-row cross join — measured ~0.3 s faster per query than a
     # collect at build time). The properties below collect on first access
-    # for callers that genuinely want the numbers.
+    # for callers that genuinely want the numbers; from then on score_terms
+    # plans them as literals, so an index queried many times (the pipeline
+    # facade) pays that collect once instead of a stats job per query.
     _scalars: tuple[int, float] | None = None
 
     def _fetch(self) -> tuple[int, float]:
@@ -119,7 +121,8 @@ def score_terms(index: BM25Index, query_terms: DataFrame) -> DataFrame:
     ``query_terms``: (query_id, term) — distinct terms per query, tiny →
     broadcast. The join prunes postings to query terms before any math;
     corpus stats arrive as a broadcast 1-row cross join, so the whole
-    search is one job with no prior collect.
+    search is one job with no prior collect — or as literals once they have
+    been collected (:class:`BM25Index`); the two give identical doubles.
     """
     idf = F.log(
         F.lit(1.0)
@@ -130,8 +133,12 @@ def score_terms(index: BM25Index, query_terms: DataFrame) -> DataFrame:
         qt.join(index.postings, "term")
         .join(F.broadcast(index.term_df), "term")
         .join(index.doc_lens, "doc_id")
-        .crossJoin(F.broadcast(index.stats))
     )
+    if index._scalars is None:
+        matched = matched.crossJoin(F.broadcast(index.stats))
+    else:
+        n, avgdl = index._scalars
+        matched = matched.withColumns({"__n": F.lit(float(n)), "__avgdl": F.lit(avgdl)})
     tf, dl = F.col("tf").cast("double"), F.col("dl").cast("double")
     score = idf * (
         tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / F.col("__avgdl")))

@@ -77,6 +77,13 @@ def fan_out_small_scan(docs: DataFrame) -> DataFrame:
     parallelizes (the 100 TB case: thousands of row groups) is untouched,
     and the shuffled payload is the raw doc rows ONCE, far smaller than
     the exploded shingle stream it unlocks parallelism for.
+
+    The check itself can cost a Spark job: ``docs.rdd.getNumPartitions()``
+    plans ``docs``, and when that plan holds a shuffle (a dropDuplicates, a
+    join) AQE executes it to learn the partition count, before the caller's
+    own action plans it again. Measured: a search that fanned out its
+    deduplicated corpus per query ran one job while its DataFrame was being
+    built. Call it once per input, not once per query.
     """
     if docs.isStreaming:  # partition introspection needs a batch plan
         return docs

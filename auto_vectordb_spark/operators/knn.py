@@ -31,24 +31,40 @@ from .dedup import fan_out_small_scan
 from .relational import top_k_per_group
 
 
-def score_pairs(
-    queries: DataFrame,
-    corpus: DataFrame,
-    query_vec: str = "embedding",
-    corpus_vec: str = "embedding",
-    metric: str = "cosine",
-) -> DataFrame:
-    """Broadcast crossJoin of queries × corpus with a similarity column.
+def prepare_corpus(corpus: DataFrame, corpus_vec: str) -> DataFrame:
+    """Corpus half of :func:`score_pairs`: ``corpus`` plus ``__cv`` (the
+    vector as array<double>) and ``__cn`` (its norm), so the pair stage is
+    one dot product per (query, row) instead of three array reductions.
 
-    The query side is broadcast (it's the small side by construction), so the
-    corpus — the 100 TB side — is scanned in place with zero shuffle.
-
-    The corpus side is conditionally fanned to the session's parallelism
-    first (dedup.fan_out_small_scan): the per-pair dot product runs through
+    The corpus is conditionally fanned to the session's parallelism first
+    (dedup.fan_out_small_scan): the per-pair dot product runs through
     Spark's interpreted higher-order array lambdas (~µs per element), so an
     unsplittable single-row-group scan serializes queries × corpus × dim
     lambda evaluations onto one core. A well-partitioned corpus (the 100 TB
     case) is untouched — the scan-in-place/zero-shuffle contract holds.
+
+    The result depends on the corpus only, so a caller that scores many
+    query batches against one corpus can prepare it once and cache it
+    (pipeline.VectorPipeline's search view does).
+    """
+    return (
+        fan_out_small_scan(corpus)
+        .withColumn("__cv", V.as_double_array(F.col(corpus_vec)))
+        .withColumn("__cn", V.norm(F.col(corpus_vec)))
+    )
+
+
+def score_prepared(
+    queries: DataFrame,
+    prepared: DataFrame,
+    query_vec: str,
+    metric: str,
+) -> DataFrame:
+    """Pair half of :func:`score_pairs`: broadcast crossJoin of queries ×
+    a :func:`prepare_corpus` frame with a similarity column.
+
+    The query side is broadcast (it's the small side by construction), so the
+    corpus — the 100 TB side — is scanned in place with zero shuffle.
     """
     q = F.broadcast(
         queries.select(
@@ -57,17 +73,23 @@ def score_pairs(
             V.norm(F.col(query_vec)).alias("__qn"),
         )
     )
-    # Pre-cast + pre-norm the corpus side so the pair stage is one dot product
-    # per (query, row) instead of three array reductions.
-    corpus = fan_out_small_scan(corpus)
-    c = corpus.withColumn("__cv", V.as_double_array(F.col(corpus_vec))).withColumn(
-        "__cn", V.norm(F.col(corpus_vec))
-    )
     if metric == "cosine":
         sim = V.cosine_with_norms(F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn"))
     else:
         sim = V.dot(F.col("__qv"), F.col("__cv"))
-    return q.crossJoin(c).withColumn("score", sim).drop("__qv", "__qn", "__cv", "__cn")
+    return q.crossJoin(prepared).withColumn("score", sim).drop("__qv", "__qn", "__cv", "__cn")
+
+
+def score_pairs(
+    queries: DataFrame,
+    corpus: DataFrame,
+    query_vec: str = "embedding",
+    corpus_vec: str = "embedding",
+    metric: str = "cosine",
+) -> DataFrame:
+    """Broadcast crossJoin of queries × corpus with a similarity column:
+    :func:`score_prepared` over :func:`prepare_corpus`."""
+    return score_prepared(queries, prepare_corpus(corpus, corpus_vec), query_vec, metric)
 
 
 def knn_exact(
@@ -145,11 +167,7 @@ def mine_hard_negatives(
             V.norm(F.col(query_vec)).alias("__qn"),
         )
     )
-    c = fan_out_small_scan(corpus).withColumn(
-        "__cv", V.as_double_array(F.col(corpus_vec))
-    ).withColumn(
-        "__cn", V.norm(F.col(corpus_vec))
-    )
+    c = prepare_corpus(corpus, corpus_vec)
     sim = V.cosine_with_norms(F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn"))
     scored = (
         q.crossJoin(c)

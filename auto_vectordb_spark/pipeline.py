@@ -37,8 +37,10 @@ Endpoint ↔ method map (reference file:line → here):
   here)
 
 Scale design: the corpus is written partitioned by ``lv1_cat`` (partition
-pruning for category-scoped search); BM25 postings shuffle once at build;
-query-time plans only broadcast-join query-sized tables against them.
+pruning for category-scoped corpus reads); BM25 postings shuffle once at
+build; everything else a search needs from the corpus (dedup, fan-out,
+vector cast and norms, BM25 corpus scalars) is built once per index into a
+cached search view, so query-time plans read cached state only.
 """
 
 from __future__ import annotations
@@ -47,6 +49,7 @@ import shutil
 from collections.abc import Callable, Iterator
 from pathlib import Path
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -64,6 +67,7 @@ from .operators import bm25 as BM25
 from .operators import hybrid as HY
 from .operators import knn as KNN
 from .operators.relational import delete_by_ids as _delete_by_ids
+from .session import release_materialized
 from .sources.files import swap_dir
 
 # A parser maps (filepath, raw bytes) → [(page_number, page_markdown), ...].
@@ -139,6 +143,7 @@ class VectorPipeline:
         self.upload_root = upload_root
         self._bm25: BM25.BM25Index | None = None
         self._corpus_cache: DataFrame | None = None
+        self._view: DataFrame | None = None  # see _search_view
 
     # ---- staging (S1/S2) --------------------------------------------------
 
@@ -295,10 +300,22 @@ class VectorPipeline:
         """
         ok = chunks.filter(F.col("status") == "success").drop("error", "status")
         ok.write.mode(mode).partitionBy("lv1_cat").parquet(str(self.base / "corpus"))
-        self._corpus_cache = None
-        self._bm25 = None
+        self._invalidate()
         if remove_original:
             self.clear_staging()
+
+    def _invalidate(self) -> None:
+        """Forget every frame derived from the corpus on disk — the corpus
+        read, the BM25 index and the search view — and release their
+        blocks. Called after each write to the corpus."""
+        if self._bm25 is not None:
+            for df in (self._bm25.postings, self._bm25.doc_lens, self._bm25.term_df):
+                df.unpersist(False)
+        if self._view is not None:
+            release_materialized(self._view)
+        self._corpus_cache = None
+        self._bm25 = None
+        self._view = None
 
     def corpus(self) -> DataFrame:
         if self._corpus_cache is None:
@@ -315,11 +332,37 @@ class VectorPipeline:
     def build_index(self) -> None:
         """S11 — derive the search-index artifacts from the corpus: BM25
         postings/stats (cached DataFrames). Idempotent by id
-        (dropDuplicates = ES _id overwrite, elasticsearch_index.py:141)."""
+        (dropDuplicates = ES _id overwrite, elasticsearch_index.py:141).
+        Replaces any previous index and search view."""
+        self._invalidate()
         docs = self.corpus().dropDuplicates(["id"]).select(
             F.col("id").alias("doc_id"), F.col("page_content").alias("text")
         )
         self._bm25 = BM25.build_index(docs, "doc_id", "text", cache=True)
+
+    def _search_view(self) -> DataFrame:
+        """The corpus-only half of every search, built on the first search
+        after :meth:`build_index` and kept until :meth:`_invalidate`: the
+        corpus deduplicated by id (ES _id overwrite) and fanned out, with
+        knn.prepare_corpus's array<double> cast and norm. The float
+        ``embeddings`` are dropped; hits get them back from ``__cv`` by an
+        exact double→float cast. Persisted MEMORY_AND_DISK and materialized
+        here, so a query scans cached rows, not parquet through a dedup
+        shuffle, a fan-out shuffle and per-row norms.
+
+        The BM25 corpus scalars are collected here too, once, so that
+        bm25.score_terms plans them as literals instead of aggregating
+        ``doc_lens`` into a broadcast row on every query.
+        """
+        if self._bm25 is None:
+            self.build_index()
+        if self._view is None:
+            dedup = self.corpus().dropDuplicates(["id"])
+            view = KNN.prepare_corpus(dedup, "embeddings").drop("embeddings")
+            self._view = view.persist(StorageLevel.MEMORY_AND_DISK)
+            self._view.count()
+            self._bm25._fetch()  # noqa: SLF001
+        return self._view
 
     # ---- search (V2–V5, P5, P6) -------------------------------------------
 
@@ -336,22 +379,30 @@ class VectorPipeline:
         Weighted fusion bm25*1.0 + cosine*0.8 over the union of both legs
         (minimum_should_match: 1), min_score cut, size clamped to the API
         bounds 1..100 (routers/es_index.py:45-46). Returns hits joined back
-        to corpus columns (V5 — hits are already columnar here).
+        to corpus columns (V5 — hits are already columnar here), ordered
+        (score DESC, id ASC).
 
-        ``categories`` restricts the kNN leg to the given ``lv1_cat`` values —
-        since the corpus is WRITTEN partitioned by lv1_cat, this filter is a
-        partition-pruned scan (whole directories skipped, verified in
-        tests), not a row filter.
+        Per query, only query-dependent work is planned against the cached
+        search view (:meth:`_search_view`): one dot product per view row
+        against the broadcast query vector, the BM25 leg against the cached
+        postings, fusion, a join of the broadcast ≤``size`` hits back to the
+        view and a sort of those rows in one partition. ``repartition(1)``
+        gathers them: one shuffle of ≤``size`` rows, where ``coalesce(1)``
+        would pull the join's scan of the whole view into a single task, and
+        a global ``orderBy`` would add a range-partition sampling job.
+
+        ``categories`` restricts both legs to the given ``lv1_cat`` values:
+        a row filter on the cached view, applied before kNN scoring. A
+        cached view has no directories to prune; :meth:`corpus` reads of
+        the partitioned parquet do.
         """
         size = max(1, min(int(size), 100))
-        if self._bm25 is None:
-            self.build_index()
         qvec = self.embed_texts([query_text])[0]
         if len(qvec) != self.dim:  # P6 dimension guard (es_index.py:107-111)
             raise ValueError(f"query embedding dim {len(qvec)} != {self.dim}")
-        corpus = self.corpus().dropDuplicates(["id"])
+        view = self._search_view()
         if categories is not None:
-            corpus = corpus.filter(F.col("lv1_cat").isin(list(categories)))
+            view = view.filter(F.col("lv1_cat").isin(list(categories)))
         queries_df = self.spark.createDataFrame(
             [(0, query_text)], ["query_id", "query_text"]
         )
@@ -361,16 +412,16 @@ class VectorPipeline:
                 T.StructField("embedding", T.ArrayType(T.FloatType())),
             ]),
         )
-        knn_scores = KNN.score_pairs(
-            qvec_df, corpus.select(F.col("id").alias("doc_id"), F.col("embeddings")),
-            corpus_vec="embeddings",
+        knn_scores = KNN.score_prepared(
+            qvec_df, view.select(F.col("id").alias("doc_id"), "__cv", "__cn"),
+            "embedding", "cosine",
         ).select("query_id", "doc_id", "score")
         bm25_scores = BM25.search(self._bm25, queries_df, k=max(size * 10, 50))
         if categories is not None:
             # the BM25 index is corpus-wide; restrict its leg too, or
             # out-of-category docs would occupy top-k slots pre-join
             bm25_scores = bm25_scores.join(
-                corpus.select(F.col("id").alias("doc_id")), "doc_id", "left_semi"
+                view.select(F.col("id").alias("doc_id")), "doc_id", "left_semi"
             )
         if mode == "hybrid":
             hits = HY.fuse_weighted(bm25_scores, knn_scores, min_score=min_score, k=size)
@@ -390,16 +441,21 @@ class VectorPipeline:
             hits = HY.rerank_token_overlap(
                 cand,
                 queries_df,
-                corpus.select(F.col("id").alias("doc_id"), F.col("page_content")),
+                view.select(F.col("id").alias("doc_id"), F.col("page_content")),
                 k=size,
                 text_col="page_content",
             ).select("query_id", "doc_id", F.col("rerank_score").alias("score"))
         else:
             raise ValueError(f"unknown mode {mode!r}")
+        rows = view.select(*[
+            F.col("__cv").cast("array<float>").alias(c) if c == "embeddings" else c
+            for c in self.corpus().columns
+        ])
         return (
-            hits.join(corpus, hits["doc_id"] == corpus["id"])
-            .drop("doc_id", "query_id")
-            .orderBy(F.col("score").desc(), F.col("id").asc())
+            rows.join(F.broadcast(hits), rows["id"] == hits["doc_id"])
+            .select("score", *rows.columns)
+            .repartition(1)
+            .sortWithinPartitions(F.col("score").desc(), F.col("id").asc())
         )
 
     # ---- management (P1, P4, A1, A2) --------------------------------------
@@ -434,8 +490,7 @@ class VectorPipeline:
         staging = self.base / "corpus_staging"
         remaining.write.mode("overwrite").partitionBy("lv1_cat").parquet(str(staging))
         swap_dir(self.spark, staging, self.base / "corpus")
-        self._corpus_cache = None
-        self._bm25 = None
+        self._invalidate()
 
     def count(self) -> int:
         return self.corpus().count()
@@ -592,8 +647,7 @@ def _ingest_stream_method(
             ok.write.mode("append").partitionBy("lv1_cat").parquet(
                 str(self.base / "corpus")
             )
-            self._corpus_cache = None
-            self._bm25 = None
+            self._invalidate()
 
     return foreach_batch_index_merge(chunks, write_fn, ckpt)
 

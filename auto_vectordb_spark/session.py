@@ -12,7 +12,10 @@ Storage lifecycle — each working set materialized in ``operators/``,
 → several consumers → done) is ``with materialized(df, posture)``, released
 on exit, raise included; rolling loop state (round i+1 reads round i)
 releases the previous round once the next one is materialized; blocks the
-returned DataFrame still reads belong to the caller.
+returned DataFrame still reads belong to the caller. State a long-lived
+owner keeps across calls belongs to that owner and is released when it is
+invalidated: ``VectorPipeline``'s BM25 index and search view live until the
+next write to its corpus.
 """
 
 from __future__ import annotations
